@@ -3,7 +3,9 @@
 the tables (testdata-sf1 / testdata-sf3 carry documents/embeddings/events/
 lineitem/part): times the named oracle SQLs in DuckDB over whatever tables
 exist (directories of part-files are globbed). The Spark side of the pair
-comes from `graft.Bench <names...>` / `graft.ScaleSmoke` on the same dir.
+comes from `graft.Bench <names...>` with SPARK_GRAFT_SF_DIR set to the
+same dir (one JVM per dir; see Bench's usage for the -explain and -warm
+modes).
 
 Usage: crossover.py <sfDir> <oracleSqlJson> <query> [query...]
 Prints one JSON line {name: best_of_2_seconds} plus per-query lines.

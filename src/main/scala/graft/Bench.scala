@@ -1,40 +1,100 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.util.concurrent.atomic.AtomicInteger
 
-/** Benchmark main: runs every registered query on SPARK_GRAFT_SF_DIR and
-  * prints ONE JSON line {"metric":...,"value":N,"unit":"sec","queries":
-  * {name:sec,...},"sf":...}. Each query is timed to full materialization
-  * (count of the final plan), matching what the DuckDB baseline pays.
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftshim.ListenerBus
+
+/** Benchmark main and the one dev harness: runs the registered queries
+  * on SPARK_GRAFT_SF_DIR and prints ONE JSON line {"metric":...,"value":N,
+  * "unit":"sec","queries":{name:sec,...},"sf":...}. Each query is timed
+  * to full materialization ([[materialize]]), matching what the DuckDB
+  * baseline pays.
+  *
+  * Usage: `Bench [-explain | -warm <q>] [name...]`
+  *  - no names: the whole suite (the driver's invocation);
+  *  - names: only those queries (local iteration; unknown names fail);
+  *  - `-explain`: print each query's formatted plan, run no timed pass;
+  *  - `-warm q`: before each timed query, clear the cache and run `q`
+  *    untimed, so the time is the query's marginal cost given q's
+  *    shared caches (cold minus marginal is the shared build).
+  * Growth ratios come from two runs with SPARK_GRAFT_SF_DIR at the small
+  * and then the big directory, one query per JVM.
   */
 object Bench {
+
+  /** The timed action: a noop write produces and discards every row and
+    * every column. NOT count(): count() re-optimizes the plan for zero
+    * output columns, so the final sort is eliminated, output-only
+    * projections prune away, and LEFT OUTER joins whose right side is
+    * provably duplicate-free (any doc-id aggregate) are REMOVED — a
+    * query like llm_curate_pipeline2 collapsed to scan+groupBy (2.7 s
+    * under count() vs 55-66 s in full at sf0.1). The noop sink matches
+    * what the DuckDB side pays (minus its Python row conversion, an
+    * asymmetry in the ORACLE's favor). BenchActionPlanSpec pins it. */
+  def materialize(df: DataFrame): Unit =
+    df.write.mode("overwrite").format("noop").save()
+
+  /** JSON string literal: backslash, quote and ALL control chars (<0x20)
+    * escaped — a tab or CR in builder-authored SQL would otherwise make
+    * a consumer's json.load fail. */
+  def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"' => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
+  /** Spark jobs, stages and tasks since the last [[take]]. */
+  private final class JobCounter extends SparkListener {
+    private val jobs, stages, tasks = new AtomicInteger()
+    override def onJobStart(j: SparkListenerJobStart): Unit = {
+      jobs.incrementAndGet(); ()
+    }
+    override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
+      stages.incrementAndGet()
+      tasks.addAndGet(s.stageInfo.numTasks); ()
+    }
+    /** Drains the listener bus first, so every event of the actions run
+      * so far is counted here and none bleeds into the next read. */
+    def take(spark: SparkSession): Seq[Int] = {
+      ListenerBus.drain(spark.sparkContext)
+      Seq(jobs, stages, tasks).map(_.getAndSet(0))
+    }
+  }
+
   def main(args: Array[String]): Unit = {
+    val (explain, warm, names) = args.toList match {
+      case "-explain" :: rest => (true, None, rest)
+      case "-warm" :: q :: rest => (false, Some(q), rest)
+      case rest => (false, None, rest)
+    }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // AQE re-plans at every exchange using runtime statistics — the
-      // right default on a cluster, where skew/coalesce decisions save
-      // minutes. At bench scale (tens of MB, known-tiny stages) the
-      // per-stage materialize-and-replan latency is pure overhead:
-      // measured +4 s across the 78-query suite (ngram 3.7→2.3 s,
-      // minhash 3.0→2.0 s) with zero plan-quality benefit. Production
-      // sessions keep AQE on (see ARCHITECTURE.md); set
-      // SPARK_GRAFT_AQE=true to bench with it.
-      .config("spark.sql.adaptive.enabled",
-        // normalized: any of true/1/yes (case-insensitive) enables; anything
-        // else benches with AQE off rather than throwing on session build
-        sys.env.get("SPARK_GRAFT_AQE")
-          .exists(v => Set("true", "1", "yes")(v.toLowerCase)).toString)
-      // default 100 evicts compiled classes across 55 queries → constant
-      // recompilation; size for the whole suite so warmup compiles stick
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // unknown names fail fast — a typo'd run must not print a plausible
+    // empty JSON
+    val queries = SparkEntry.queries
+    val only = names.toSet
+    val unknown = (only ++ warm) -- queries.keySet
+    require(unknown.isEmpty, s"unknown queries: ${unknown.toSeq.sorted}")
+    val warmFn = warm.map(queries)
+    val spark = graft.core.GraftSession.harness(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val ordered = queries.toSeq
+      .filter { case (name, _) => only.isEmpty || only(name) }
+      .sortBy(_._1)
+    if (explain) {
+      ordered.foreach { case (name, fn) =>
+        println(s"===== $name =====")
+        println(fn(spark, sfDir).queryExecution.explainString(
+          org.apache.spark.sql.execution.FormattedMode))
+      }
+      spark.stop()
+      return
+    }
     // Untimed warmup: pay one-time JVM/session inits (whole-stage codegen
     // compilation, JIT, parquet pushdown paths, window/json/regexp/HOF
     // expression classes) outside the per-query timings — e.g. the first
@@ -50,63 +110,47 @@ object Bench {
         sibling.getPath
       else sfDir
     }
-    // optional trailing names restrict the suite (local iteration only;
-    // the driver's no-arg invocation always benches everything). Unknown
-    // names fail fast — a typo'd run must not print a plausible empty
-    // JSON.
-    val only = args.toSet
-    val unknown = only -- SparkEntry.queries.keySet
-    require(unknown.isEmpty, s"unknown queries: ${unknown.toSeq.sorted}")
-    val selected = SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only(name) }
-    selected.foreach { case (_, fn) =>
-      // same action as the timed pass (noop write) so the warmup
-      // compiles the same codegen shapes, including the output
-      // projections count() would have pruned
-      try fn(spark, warmDir).write.mode("overwrite").format("noop").save()
+    ordered.foreach { case (_, fn) =>
+      try materialize(fn(spark, warmDir))
       catch { case _: Throwable => () }
     }
-    spark.sharedState.cacheManager.clearCache()
-    System.gc() // drain warmup garbage outside the timed window
+    def clearCache(): Unit = {
+      spark.sharedState.cacheManager.clearCache()
+      System.gc() // drain garbage outside the timed window
+    }
+    clearCache()
+    val counter = new JobCounter
+    spark.sparkContext.addSparkListener(counter)
     // Three timed passes, per-query minimum: single-run times on this VM
     // vary up to 2× from GC/scheduling noise (measured 12.7-22.8 s suite
     // totals on identical binaries); best-of-N is the standard way to
     // report the repeatable cost. The cache is cleared between passes so
     // each pass pays the same cold data work (intra-pass cache sharing
     // between queries is part of the engine design and kept).
-    val ordered = selected.toSeq.sortBy(_._1)
+    //
     // A query that throws must be marked as an ERROR, not recorded as a
     // suspiciously-fast time (r7 logged two crashed queries at ~6 ms,
     // indistinguishable from well-optimized plans). Errored queries are
     // excluded from BOTH engines' totals so the headline ratio compares
     // only queries both engines completed.
     val qErrors = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    // FULL materialization (noop write: every row, every column), NOT
-    // count(). count() re-optimizes the plan for zero output columns:
-    // the final sort is eliminated, output-only projections prune away,
-    // and — decisively — LEFT OUTER joins whose right side is provably
-    // duplicate-free (any doc-id aggregate) are REMOVED entirely, so a
-    // query like llm_curate_pipeline2 collapsed to scan+groupBy and the
-    // bench recorded ~none of the work its oracle (a full fetchall)
-    // paid. Measured at sf0.1: pipeline2 count() 2.7 s warm vs 55-66 s
-    // full — the r12 flag analysis chased cache attribution when the
-    // instrument itself was the gap. The noop sink produces and
-    // discards every row, matching what the DuckDB side pays (minus
-    // its Python row conversion, an asymmetry in the ORACLE's favor).
-    def timedPass(): Map[String, Double] = ordered.map { case (name, fn) =>
-      val t0 = System.nanoTime()
+    def timedPass(): Map[String, (Double, Seq[Int])] = ordered.map { case (name, fn) =>
+      var t = 0.0
       try {
-        fn(spark, sfDir).write.mode("overwrite").format("noop").save()
+        warmFn.foreach { w => clearCache(); materialize(w(spark, sfDir)) }
+        counter.take(spark)
+        val t0 = System.nanoTime()
+        try materialize(fn(spark, sfDir))
+        finally t = (System.nanoTime() - t0) / 1e9
       } catch { case e: Throwable =>
         qErrors.getOrElseUpdate(name,
           Option(e.getMessage).getOrElse(e.getClass.getName).take(300))
       }
-      name -> (System.nanoTime() - t0) / 1e9
+      name -> (t, counter.take(spark))
     }.toMap
     val passes = (1 to 3).map { _ =>
       val p = timedPass()
-      spark.sharedState.cacheManager.clearCache()
-      System.gc()
+      clearCache()
       p
     }
     // The driver records only the LAST 2000 chars of output and parses the
@@ -120,7 +164,7 @@ object Bench {
     def f3(v: Double): String =
       String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
     val results = ordered.collect {
-      case (n, _) if !qErrors.contains(n) => n -> passes.map(_(n)).min
+      case (n, _) if !qErrors.contains(n) => n -> passes.map(_(n)._1).min
     }
     // Per-query DuckDB oracle times, measured back-to-back with the Spark
     // passes on the same host so host-load swings hit both engines (the
@@ -132,19 +176,10 @@ object Bench {
       if (!script.isFile) Map.empty
       else try {
         val tmp = java.nio.file.Files.createTempDirectory("graft-bench-oracle")
-        def esc(s: String) = s.flatMap {
-          case '"' => "\\\""
-          case '\\' => "\\\\"
-          case '\n' => "\\n"
-          case '\r' => "\\r"
-          case '\t' => "\\t"
-          case c if c < ' ' => f"\\u${c.toInt}%04x"
-          case c => c.toString
-        }
         val json = SparkEntry.oracleSql
           .filter { case (k, _) => only.isEmpty || only(k) }
           .toSeq.sortBy(_._1)
-          .map { case (k, v) => "\"" + esc(k) + "\":\"" + esc(v) + "\"" }
+          .map { case (k, v) => jsonString(k) + ":" + jsonString(v) }
           .mkString("{", ",", "}")
         java.nio.file.Files.write(tmp.resolve("oracle_sql.json"),
           json.getBytes("UTF-8"))
@@ -185,17 +220,8 @@ object Bench {
           Map.empty
       }
     }
-    def escJ(s: String) = s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
     val errJson = qErrors
-      .map { case (k, v) => "\"" + escJ(k) + "\":\"" + escJ(v) + "\"" }
+      .map { case (k, v) => jsonString(k) + ":" + jsonString(v) }
       .mkString("{", ",", "}")
     val detail = results.map { case (k, v) =>
       "\"" + k + "\":" + (oracleTimes.get(k) match {
@@ -203,7 +229,14 @@ object Bench {
         case None => f3(v)
       })
     }.mkString("{", ",", "}")
-    println(s"""# per-query detail (full, [spark_s, oracle_s]): $detail""")
+    // Spark jobs/stages/tasks per query and pass: the fixed per-query
+    // cost at small scale is actions and jobs, and pass 1 also shows the
+    // one-time memoized builds the later passes reuse
+    val jobDetail = ordered.map { case (n, _) =>
+      "\"" + n + "\":" +
+        passes.map(_(n)._2.mkString("[", ",", "]")).mkString("[", ",", "]")
+    }.mkString("{", ",", "}")
+    println(s"""# per-query detail (full, [spark_s, oracle_s]; then [jobs, stages, tasks] per pass): $detail $jobDetail""")
     if (qErrors.nonEmpty)
       println(s"""# query ERRORS (excluded from all totals): $errJson""")
     // full per-query pairs as a FILE, out of the driver's 2k-tail budget.
@@ -215,13 +248,13 @@ object Bench {
     // spread is what tells cost from weather without re-deriving it.
     val passDetail = ordered.collect {
       case (n, _) if !qErrors.contains(n) =>
-        "\"" + n + "\":[" + passes.map(p => f3(p(n))).mkString(",") + "]"
+        "\"" + n + "\":[" + passes.map(p => f3(p(n)._1)).mkString(",") + "]"
     }.mkString("{", ",", "}")
     if (only.isEmpty)
       try java.nio.file.Files.write(
         java.nio.file.Paths.get("bench_detail.json"),
         (s"""{"sf":"$sfDir","errors":$errJson,"pairs":$detail,""" +
-          s""""passes":$passDetail}""" + "\n")
+          s""""passes":$passDetail,"jobs":$jobDetail}""" + "\n")
           .getBytes("UTF-8"))
       catch { case _: Exception => () }
     // chars for the queries map in the final line: the whole line must stay
@@ -280,7 +313,7 @@ object Bench {
     // regression (single-run totals vary up to 2× on shared VMs).
     // warm_dir makes the numbers interpretable: warmup at the target dir
     // (no sf0.001 sibling) means the suite ran once untimed at full SF.
-    val passTotals = passes.map(p => f3(p.values.sum)).mkString("[", ",", "]")
+    val passTotals = passes.map(p => f3(p.values.map(_._1).sum)).mkString("[", ",", "]")
     // duck_n exposes how many queries the DuckDB side actually timed:
     // oracle_bench.py drops a query that errors in DuckDB from its
     // output, and a silent count mismatch would make the headline
@@ -291,7 +324,7 @@ object Bench {
     // errored query NAMES in the final line (bounded): a crash must be a
     // visible artifact field, never a silent omission or a fast time
     val errNames = {
-      val names = qErrors.keys.take(5).map("\"" + escJ(_) + "\"").toSeq
+      val names = qErrors.keys.take(5).map(jsonString).toSeq
       (if (qErrors.size > 5) names :+ s""""+${qErrors.size - 5} more"""" else names)
         .mkString("[", ",", "]")
     }

@@ -12,6 +12,8 @@ import org.apache.spark.sql.functions._
   * exact/near-dup rates, labeled embedding clusters), deliberately NOT
   * byte-compatible — which is exactly what a scaling measurement
   * needs: the absolute work differs, the GROWTH CURVE is the signal.
+  * The Spark side of a growth ratio is two `graft.Bench <q>` runs, with
+  * SPARK_GRAFT_SF_DIR at the small and then at the generated dir.
   */
 object GenScale {
 
@@ -144,13 +146,8 @@ object GenScale {
     // second arg: scale multiplier on the sf1 row counts (e.g. 3 for the
     // sf3 notch the floor-class crossovers extrapolate to). Default 1.
     val m = if (args.length >= 2) args(1).toLong else 1L
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.harness(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     documents(spark, 50000L * m).coalesce((4 * m).toInt)
       .write.mode("overwrite").parquet(s"$out/documents.parquet")
     embeddings(spark, 20000L * m).coalesce((4 * m).toInt)
@@ -186,14 +183,8 @@ object StoreScale {
 
   def main(args: Array[String]): Unit = {
     val base = if (args.nonEmpty) args(0) else "/tmp/graft-storescale"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.harness(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     import graft.llmops.{EmbedDedup, IncrementalDedup, PhashDedup}
     val Small = 30000L
     val Big = 300000L
@@ -285,136 +276,6 @@ object StoreScale {
     }.mkString("{", ",", "}")
     println(s"""{"small_docs":$Small,"big_docs":$Big,"batch":$BatchN,""" +
       s""""passes":$Passes,"store_scale":$qjson}""")
-    spark.stop()
-  }
-}
-
-/** Times each named query at two SF dirs (spark side only — the point
-  * is the growth ratio, not the oracle), best of `Passes`, and prints
-  * one JSON line: {"queries":{name:[t_small, t_big, ratio]},...}.
-  * Session state (memoized side tables, caches) is cleared between
-  * passes exactly like graft.Bench. */
-object ScaleSmoke {
-
-  private val Passes = 2
-
-  def main(args: Array[String]): Unit = {
-    val small = args(0)
-    val big = args(1)
-    val names = args.drop(2).toSeq
-    require(names.nonEmpty, "usage: ScaleSmoke <smallDir> <bigDir> <q>...")
-    val unknown = names.toSet -- SparkEntry.queries.keySet
-    require(unknown.isEmpty, s"unknown queries: $unknown")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // SAME instrument as Bench: AQE off unless SPARK_GRAFT_AQE —
-      // measured 2-8× penalty on the composed multi-stage plans
-      // (llm_curate_pipeline2: 7.4 s AQE-off vs 18-63 s AQE-on at
-      // sf0.1), which would make growth ratios incomparable with the
-      // bench numbers they're meant to explain
-      .config("spark.sql.adaptive.enabled",
-        sys.env.get("SPARK_GRAFT_AQE")
-          .exists(v => Set("true", "1", "yes")(v.toLowerCase)).toString)
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def timeOne(name: String, dir: String): Double = {
-      val runs = (1 to Passes).map { _ =>
-        spark.sharedState.cacheManager.clearCache()
-        val t0 = System.nanoTime()
-        SparkEntry.queries(name)(spark, dir).write
-          .mode("overwrite").format("noop").save()
-        (System.nanoTime() - t0) / 1e9
-      }
-      runs.min
-    }
-    val rows = names.map { n =>
-      val ts = timeOne(n, small)
-      val tb = timeOne(n, big)
-      (n, ts, tb)
-    }
-    def f3(d: Double) = f"$d%.3f"
-    val qjson = rows.map { case (n, ts, tb) =>
-      s""""$n":[${f3(ts)},${f3(tb)},${f3(tb / math.max(ts, 1e-9))}]"""
-    }.mkString("{", ",", "}")
-    println(s"""{"small":"$small","big":"$big","passes":$Passes,""" +
-      s""""queries":$qjson}""")
-    spark.stop()
-  }
-}
-
-/** Shared-cache ATTRIBUTION instrument (round-15 verdict task 6): the
-  * gram/token session caches are built once and amortized across the
-  * whole query family in a suite run, but a per-query isolated timing
-  * attributes the entire build to whichever family member runs first —
-  * that is what keeps llm_text_tfidf / llm_profile_vocab_approx /
-  * llm_profile_tokens_approx flagged. This main makes the attribution
-  * measurable instead of argued: for each target query it reports
-  *
-  *   cold     = cleared caches, query pays the shared build (the
-  *              driver-bench condition), and
-  *   marginal = cleared caches, a WARMUP family sibling runs untimed
-  *              to build the shared caches, then the target is timed —
-  *              its own result memo does NOT exist yet (the warmup is a
-  *              different query), so this is the genuine incremental
-  *              cost of the query given a warm family cache.
-  *
-  * Usage: MarginalSmoke <sfDir> <warmupQuery> <query> [query...]
-  * Prints one JSON line {"queries":{name:[cold,marginal,frac]}} where
-  * frac = marginal/cold (the share of the cold time that is the
-  * query's own work rather than the shared build).
-  */
-object MarginalSmoke {
-
-  def main(args: Array[String]): Unit = {
-    require(args.length >= 3,
-      "usage: MarginalSmoke <sfDir> <warmupQuery> <q>...")
-    val dir = args(0)
-    val warmup = args(1)
-    val names = args.drop(2).toSeq
-    val unknown = (names :+ warmup).toSet -- SparkEntry.queries.keySet
-    require(unknown.isEmpty, s"unknown queries: $unknown")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // same instrument as Bench/ScaleSmoke: AQE off, noop write
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def run(name: String): Double = {
-      val t0 = System.nanoTime()
-      SparkEntry.queries(name)(spark, dir).write
-        .mode("overwrite").format("noop").save()
-      (System.nanoTime() - t0) / 1e9
-    }
-    def best2(body: => Double): Double = math.min(body, body)
-    val rows = names.map { n =>
-      val cold = best2 {
-        spark.sharedState.cacheManager.clearCache()
-        run(n)
-      }
-      val marginal = best2 {
-        spark.sharedState.cacheManager.clearCache()
-        run(warmup) // untimed: builds the shared family caches
-        run(n)
-      }
-      (n, cold, marginal)
-    }
-    def f3(d: Double) = f"$d%.3f"
-    val qjson = rows.map { case (n, c, m) =>
-      s""""$n":[${f3(c)},${f3(m)},${f3(m / math.max(c, 1e-9))}]"""
-    }.mkString("{", ",", "}")
-    println(s"""{"dir":"$dir","warmup":"$warmup","queries":$qjson}""")
     spark.stop()
   }
 }

@@ -1,6 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+
+import Bench.jsonString
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -12,17 +14,8 @@ object Verify {
     val only = args.drop(2).toSet
     require((only -- SparkEntry.queries.keySet).isEmpty,
       s"unknown queries: ${(only -- SparkEntry.queries.keySet).toSeq.sorted}")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.parquet carries TIMESTAMP(NANOS); read as nano longs and
-      // let Tables.load normalize to microsecond timestamps.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.harness(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
     new java.io.File(outDir).mkdirs()
     // A query that throws must surface as a visible error row, not a
     // silent omission (round 7 shrank 114→112 with no red flag): failures
@@ -38,23 +31,11 @@ object Verify {
         errors(name) = Option(e.getMessage).getOrElse(e.getClass.getName)
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     val errJson = errors
-      .map { case (k, v) => s"${q(k)}: ${q(v.take(2000))}" }
+      .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v.take(2000))}" }
       .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/_errors.json"), errJson)
     if (errors.nonEmpty)

@@ -217,7 +217,7 @@ object SearchApi {
         // plan, never the rows. A stale or absent index falls back to
         // the scan path: fresh-but-slower beats fast-but-stale, and the
         // next maintenance cycle restores the indexed route.
-        val terms = q.toLowerCase.trim.split("\\s+").filter(_.nonEmpty).toSeq
+        val terms = graft.query.Bm25.queryTerms(q)
         index.filter(_.fresh) match {
           case Some(ib) if terms.nonEmpty =>
             val sc = graft.query.TermIndex

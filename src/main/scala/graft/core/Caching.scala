@@ -36,20 +36,9 @@ object Caching {
   /** Persist AND materialize (count), once per cache generation — for
     * frames whose consumers fan into multiple plan branches in the
     * SAME job, where lazy materialization would recompute the subtree
-    * per branch (Catalyst does not CSE plan subtrees). Set
-    * GRAFT_TIMING=1 to print per-materialization wall times (dev
-    * attribution of cache-build cost inside composed queries). */
-  def matOnce2(label: String, df: DataFrame): DataFrame = matOnce(df, label)
-
-  def matOnce(df: DataFrame, label: String = ""): DataFrame = {
-    if (df.storageLevel == StorageLevel.NONE) {
-      df.persist()
-      if (sys.env.contains("GRAFT_TIMING")) {
-        val t0 = System.nanoTime()
-        df.count()
-        println(f"MATONCE ${if (label.isEmpty) df.hashCode.toString else label} ${(System.nanoTime() - t0) / 1e9}%.3f")
-      } else df.count()
-    }
+    * per branch (Catalyst does not CSE plan subtrees). */
+  def matOnce(df: DataFrame): DataFrame = {
+    if (df.storageLevel == StorageLevel.NONE) df.persist().count()
     df
   }
 
@@ -61,30 +50,41 @@ object Caching {
     * SHARED upstream (e.g. the token cache) must be pinned BEFORE the
     * concurrent block so racing threads don't double-compute it. Waits
     * for all; the first failure rethrows its cause. Bounded pool, one
-    * thread per thunk (pin fan-out is 2-4 in practice). */
-  def pinConcurrently(builds: (() => Unit)*): Unit = {
+    * thread per thunk (pin fan-out is 2-4 in practice).
+    *
+    * Every thunk runs in one job group of this call, so the first
+    * failure cancels the siblings' Spark jobs — running ones with their
+    * tasks interrupted, and any they would still submit — and interrupts
+    * the sibling threads. A cancelled pin re-materializes lazily at its
+    * next access (persistOnce/matOnce are idempotent). */
+  def pinConcurrently(spark: SparkSession)(builds: (() => Unit)*): Unit = {
     if (builds.sizeIs <= 1) builds.foreach(_.apply())
     else {
+      val sc = spark.sparkContext
+      val group = s"graft-pin-${java.util.UUID.randomUUID()}"
       val pool = java.util.concurrent.Executors.newFixedThreadPool(builds.size)
       try {
-        val futs = builds.map { b =>
-          pool.submit(new java.util.concurrent.Callable[Unit] {
-            def call(): Unit = b()
+        // taken in completion order, so the first failure is seen while
+        // its siblings still run
+        val done = new java.util.concurrent.ExecutorCompletionService[Unit](pool)
+        builds.foreach { b =>
+          done.submit(new java.util.concurrent.Callable[Unit] {
+            def call(): Unit = {
+              sc.setJobGroup(group, "Caching.pinConcurrently",
+                interruptOnCancel = true)
+              b()
+            }
           })
         }
-        try futs.foreach { f =>
-          try f.get()
+        try builds.foreach { _ =>
+          try done.take().get()
           catch {
             case e: java.util.concurrent.ExecutionException =>
               throw Option(e.getCause).getOrElse(e)
           }
         } catch {
           case t: Throwable =>
-            // first failure: cancel the siblings instead of letting
-            // their Spark jobs run on in the background while the
-            // caller unwinds (a cancelled pin re-materializes lazily at
-            // its next access — persistOnce/matOnce are idempotent)
-            futs.foreach(_.cancel(true))
+            sc.cancelJobGroupAndFutureJobs(group)
             pool.shutdownNow()
             throw t
         }
@@ -139,7 +139,7 @@ object Caching {
   def memoDf(s: SparkSession, key: String, eager: Boolean = false)(
       build: => DataFrame): DataFrame = {
     val df = getOrBuild(s, key)(build)
-    if (eager) matOnce(df, key) else persistOnce(df)
+    if (eager) matOnce(df) else persistOnce(df)
   }
 
   /** Drop a memo entry (and its live cache marking, if any) so the

@@ -44,6 +44,32 @@ object GraftSession {
       .config("spark.sql.shuffle.partitions", shufflePartitions))
       .getOrCreate())
 
+  /** The session of the project's own mains (`graft.Bench`,
+    * `graft.Verify`, `GenScale`, `StoreScale`): the shipped [[configure]]
+    * + [[finish]] profile plus the settings the bench measured at suite
+    * scale.
+    *  - `local[cores]` with one shuffle partition per core.
+    *  - AQE off: at tens of MB per stage its per-exchange
+    *    materialize-and-replan barrier is pure latency (+4 s over the
+    *    78-query suite of round 5, 2-8× on the memo-pinned curation
+    *    family), with no plan-quality gain.
+    *  - A codegen cache sized for the whole suite: Spark's default 100
+    *    entries evict compiled classes across queries, so every pass
+    *    would recompile.
+    *  - No UI, and WARN logging. */
+  def harness(cores: String): SparkSession = {
+    val s = finish(configure(SparkSession.builder()
+      .master(s"local[$cores]")
+      .appName("graft"))
+      .config("spark.sql.shuffle.partitions", cores)
+      .config("spark.sql.adaptive.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", "5000")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate())
+    s.sparkContext.setLogLevel("WARN")
+    s
+  }
+
   /** Post-build wiring. `spark.sql.extensions` is a STATIC conf: it only
     * takes effect when this session creates the JVM's first context. If
     * a context already existed, the extensions path is silently skipped

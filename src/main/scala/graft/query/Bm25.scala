@@ -42,6 +42,23 @@ import org.apache.spark.sql.functions._
   * corpus-sized ever shuffles or sorts. */
 object Bm25 {
 
+  /** The search query's distinct lower-cased whitespace terms: the one
+    * parse both bm25 routes of the search façade score, so a repeated
+    * term ("w w") counts once on the scan route, as on the index route,
+    * whose postings match the query's term SET. */
+  def queryTerms(query: String): Seq[String] =
+    query.toLowerCase.trim.split("\\s+").filter(_.nonEmpty).distinct.toSeq
+
+  /** One term's fixed-point BM25 summand as SQL over BIGINT operands
+    * (see the exactness contract above): `q` and `r` are the quotient
+    * and remainder of 18432·N by `sumdl`, so the length norm never forms
+    * dl·N·18432. The scan routes pass column expressions, the index
+    * route driver-side literals; every route sums this one formula. */
+  private[query] def termScoreSql(idf: String, tf: String, dl: String,
+      q: String, r: String, sumdl: String): String =
+    s"($idf * 44 * $tf * 1024) DIV (($tf * 20 + 6) * 1024 + " +
+      s"$dl * $q + ($dl * $r) DIV $sumdl)"
+
   /** Fixed-point BM25 top-k over a tokenized corpus: returns
     * (idCol, score_fp) for the k best-scoring docs with any query-term
     * match, ordered (score_fp DESC, idCol). `docs` must carry `idCol`
@@ -72,10 +89,8 @@ object Bm25 {
           col("n") * 2L + lit(2L), col(s"df_$i") * 2L + lit(1L)))
     }
     val scoreSum = terms.indices.map { i =>
-      s"(idf_$i * 44 * tf_$i * 1024) DIV " +
-        s"((tf_$i * 20 + 6) * 1024 + " +
-        s"dl * ((n * 18432) DIV sumdl) + " +
-        s"(dl * ((n * 18432) % sumdl)) DIV sumdl)"
+      termScoreSql(s"idf_$i", s"tf_$i", "dl",
+        "((n * 18432) DIV sumdl)", "((n * 18432) % sumdl)", "sumdl")
     }.mkString(" + ")
     cur
       .withColumn("score_fp", expr(scoreSum))
@@ -97,7 +112,7 @@ object Bm25 {
   def scoreSearch(corpus: DataFrame, target: DataFrame,
       fields: Seq[String], query: String,
       outCol: String = "_score"): DataFrame = {
-    val terms = query.toLowerCase.trim.split("\\s+").filter(_.nonEmpty).toSeq
+    val terms = queryTerms(query)
     require(terms.nonEmpty, "BM25 search needs at least one query term")
     graft.functions.GraftFunctions.register(corpus.sparkSession)
     def tkOf(df: DataFrame): Column =
@@ -119,10 +134,8 @@ object Bm25 {
           col("__n") * 2L + lit(2L), col(s"__df_$i") * 2L + lit(1L)))
     }
     val scoreSum = terms.indices.map { i =>
-      s"(__idf_$i * 44 * __tf_$i * 1024) DIV " +
-        s"((__tf_$i * 20 + 6) * 1024 + " +
-        s"__dl * ((__n * 18432) DIV __sumdl) + " +
-        s"(__dl * ((__n * 18432) % __sumdl)) DIV __sumdl)"
+      termScoreSql(s"__idf_$i", s"__tf_$i", "__dl",
+        "((__n * 18432) DIV __sumdl)", "((__n * 18432) % __sumdl)", "__sumdl")
     }.mkString(" + ")
     cur.withColumn(outCol, expr(scoreSum).cast("double"))
       .drop(Seq("__tk", "__dl", "__n", "__sumdl") ++

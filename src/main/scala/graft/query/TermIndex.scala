@@ -207,10 +207,8 @@ object TermIndex {
       .withColumn("df", count(lit(1)).over(w).cast("long"))
       .withColumn("idf_fp", call_function("graft_log2_fp",
         lit(n * 2 + 2), col("df") * 2L + lit(1L)))
-      .withColumn("score_t", expr(
-        s"(idf_fp * 44 * tf * 1024) DIV " +
-          s"((tf * 20 + 6) * 1024 + " +
-          s"dl * ${q}L + (dl * ${r}L) DIV ${sumdl}L)"))
+      .withColumn("score_t", expr(Bm25.termScoreSql("idf_fp", "tf", "dl",
+        s"${q}L", s"${r}L", s"${sumdl}L")))
       .groupBy("doc_id")
       .agg(sum("score_t").as("score_fp"))
       .filter(col("score_fp") > 0)

@@ -1133,7 +1133,7 @@ object CurationQueries {
         // first, single-threaded, so the racing chains read it instead
         // of double-computing it.
         LlmQueries.tokenArrays(s, d)
-        graft.core.Caching.pinConcurrently(
+        graft.core.Caching.pinConcurrently(s)(
           () => { lmScores(s, d); () },
           () => { LlmQueries.substringDupStarts(s, d); () },
           () => { dsirWeights(s, d); () })

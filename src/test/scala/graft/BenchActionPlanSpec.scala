@@ -1,14 +1,13 @@
 package graft
 
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.ListenerBus
 import org.apache.spark.sql.util.QueryExecutionListener
 
-/** Pins the bench INSTRUMENT, not a query: Bench.scala times every query
-  * with a noop write (full materialization of every row and column). The
+/** Pins the bench INSTRUMENT, not a query: Bench times every query with
+  * `Bench.materialize`, a noop write (every row and every column). The
   * r1-r12 benches used `count()`, which lets Catalyst re-optimize the timed
   * plan for zero output columns — final sorts are eliminated, output
   * projections prune away, and LEFT OUTER joins whose right side is
@@ -17,12 +16,11 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * under-measured it ~20x; see ARCHITECTURE.md round-13 notes and the
   * BASELINE.md instrument caveat).
   *
-  * These tests execute the EXACT bench action
-  * (`df.write.mode("overwrite").format("noop").save()`), capture the plan
-  * the action really executed via a QueryExecutionListener, and assert the
-  * operators count() used to delete are still present. If a future
-  * "optimization" of Bench's timed action reintroduces the pruning, these
-  * fail.
+  * These tests execute the bench's own action (`Bench.materialize`),
+  * capture the plan the action really executed via a
+  * QueryExecutionListener, and assert the operators count() used to
+  * delete are still present. If a future "optimization" of Bench's timed
+  * action reintroduces the pruning, these fail.
   */
 class BenchActionPlanSpec extends SparkSpec {
 
@@ -32,42 +30,22 @@ class BenchActionPlanSpec extends SparkSpec {
     */
   private def executedPlans(action: => Unit): Seq[String] = {
     val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val done = new CountDownLatch(1)
     val listener = new QueryExecutionListener {
       override def onSuccess(funcName: String, qe: QueryExecution,
-          durationNs: Long): Unit = {
-        plans.add(qe.executedPlan.toString)
-        done.countDown()
-      }
+          durationNs: Long): Unit = { plans.add(qe.executedPlan.toString); () }
       override def onFailure(funcName: String, qe: QueryExecution,
-          exception: Exception): Unit = done.countDown()
+          exception: Exception): Unit = ()
     }
     spark.listenerManager.register(listener)
     try {
       action
-      // listener delivery is async; wait for at least the write command,
-      // then drain the bus so stragglers land too
-      assert(done.await(120, TimeUnit.SECONDS), "no query execution observed")
-      // the bus is private (no waitUntilEmpty from here), so poll until
-      // the observed plan count is STABLE for 3 consecutive ticks rather
-      // than racing a single fixed sleep; the assertions only need the
-      // write command's plan, which `done` already guarantees — this
-      // just lets stragglers land deterministically
-      val deadline = System.nanoTime() + TimeUnit.SECONDS.toNanos(10)
-      var stable = 0
-      var last = -1
-      while (stable < 3 && System.nanoTime() < deadline) {
-        val n = plans.size
-        if (n == last) stable += 1 else { stable = 0; last = n }
-        Thread.sleep(100)
-      }
+      // listener delivery is async: drain the bus so every execution the
+      // action finished has been delivered
+      ListenerBus.drain(spark.sparkContext)
     } finally spark.listenerManager.unregister(listener)
     import scala.jdk.CollectionConverters._
     plans.asScala.toSeq
   }
-
-  private def benchAction(df: DataFrame): Unit =
-    df.write.mode("overwrite").format("noop").save()
 
   /** The exact shape count() deleted: LEFT OUTER join against a provably
     * duplicate-free (groupBy doc_id) right side, plus a final global sort.
@@ -83,7 +61,7 @@ class BenchActionPlanSpec extends SparkSpec {
   }
 
   test("bench action preserves the outer join and final sort count() pruned") {
-    val plans = executedPlans(benchAction(outerJoinSortQuery()))
+    val plans = executedPlans(Bench.materialize(outerJoinSortQuery()))
     val all = plans.mkString("\n===\n")
     assert(plans.exists(p =>
       (p.contains("SortMergeJoin") || p.contains("BroadcastHashJoin") ||
@@ -124,7 +102,7 @@ class BenchActionPlanSpec extends SparkSpec {
     // under count() the orderBy+limit collapses; under the bench action the
     // TakeOrderedAndProject (or Sort) must execute.
     val df = SparkEntry.queries("o1_multisort")(spark, sf())
-    val plans = executedPlans(benchAction(df))
+    val plans = executedPlans(Bench.materialize(df))
     val all = plans.mkString("\n===\n")
     assert(plans.exists(p =>
       p.contains("TakeOrderedAndProject") || p.contains("Sort ")),

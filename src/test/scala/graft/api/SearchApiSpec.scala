@@ -257,6 +257,17 @@ class SearchApiSpec extends SparkSpec {
       .contains("postings"), "stale binding must not serve from the index")
     assert(stale.hits.select("_docId", "_score").as[(String, Double)]
       .collect().toSet == scan)
+    // a repeated query term counts once on BOTH routes (the index route
+    // matches postings by term SET), so "red red car" scores as "red car"
+    val rep = SearchRequest(query = Some("red red car"), scorer = "bm25")
+    val repScan = SearchApi.search(docsNum, rep).hits
+      .select("_docId", "_score").as[(String, Double)].collect().toSet
+    val repIndexed = SearchApi.search(docsNum, rep,
+      index = Some(SearchApi.IndexBinding(root, indexedVersion = 7,
+        tableVersion = 7))).hits
+      .select("_docId", "_score").as[(String, Double)].collect().toSet
+    assert(repIndexed == repScan, "routes disagree on a repeated term")
+    assert(repScan == scan, "a repeated term changed the scores")
   }
 
   test("searchEnforced denies an unauthorized operation before any query compiles") {

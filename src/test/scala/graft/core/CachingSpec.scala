@@ -1,5 +1,8 @@
 package graft.core
 
+import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
+
+import org.apache.spark.scheduler.{JobSucceeded, SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -7,8 +10,9 @@ import graft.SparkSpec
 
 /** The memo layer's contracts: one analyzed frame per (session, key),
   * transparent re-persist after an external cache clear, epoch
-  * invalidation for results the CacheManager cannot see, and safety of
-  * memoized builds that derive other memoized frames. */
+  * invalidation for results the CacheManager cannot see, safety of
+  * memoized builds that derive other memoized frames, and cancellation
+  * of concurrent pins. */
 class CachingSpec extends SparkSpec {
   import spark.implicits._
 
@@ -76,5 +80,42 @@ class CachingSpec extends SparkSpec {
         .agg(count(lit(1)).as("n"))
     }
     assert(df.as[Long].head() == 2L)
+  }
+
+  test("pinConcurrently cancels the sibling pins' Spark jobs on the first failure") {
+    val sc = spark.sparkContext
+    @volatile var group: String = null
+    @volatile var succeeded = false
+    val started, ended = new CountDownLatch(1)
+    def inGroup(p: java.util.Properties) =
+      group != null && p != null && p.getProperty("spark.jobGroup.id") == group
+    val jobs = ConcurrentHashMap.newKeySet[Int]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (inGroup(j.properties)) { jobs.add(j.jobId); started.countDown() }
+      override def onJobEnd(j: SparkListenerJobEnd): Unit =
+        if (jobs.contains(j.jobId)) {
+          succeeded = j.jobResult == JobSucceeded; ended.countDown()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      val slow = () => {
+        group = sc.getLocalProperty("spark.jobGroup.id")
+        sc.parallelize(1 to 2, 2).foreach(_ => Thread.sleep(120000))
+      }
+      val failing = () => {
+        assert(started.await(60, TimeUnit.SECONDS), "the slow pin never started")
+        throw new IllegalStateException("pin failed")
+      }
+      val e = intercept[IllegalStateException](
+        Caching.pinConcurrently(spark)(slow, failing))
+      assert(e.getMessage == "pin failed")
+      // the scheduler cancels asynchronously: the sibling's job must end
+      // within seconds of the throw, not after its two-minute tasks
+      assert(ended.await(10, TimeUnit.SECONDS),
+        s"jobs of the pin group still running after the throw: $jobs")
+      assert(!succeeded, "the sibling's job ran to completion")
+    } finally sc.removeSparkListener(listener)
   }
 }

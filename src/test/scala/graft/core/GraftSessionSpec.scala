@@ -39,6 +39,27 @@ class GraftSessionSpec extends SparkSpec {
     }
   }
 
+  test("harness is the shipped profile plus the bench's measured settings") {
+    spark.sparkContext
+    val prevActive = SparkSession.getActiveSession
+    val prevDefault = SparkSession.getDefaultSession
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    try {
+      val s = GraftSession.harness("3")
+      assert(s ne spark)
+      assert(s.conf.get("spark.sql.shuffle.partitions") == "3")
+      assert(s.conf.get("spark.sql.adaptive.enabled") == "false")
+      assert(s.conf.get("spark.sql.session.timeZone") == "UTC")
+      assert(s.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
+      assert(s.catalog.functionExists("graft_log2_fp"))
+    } finally {
+      spark.sparkContext.setLogLevel("ERROR")
+      prevActive.foreach(SparkSession.setActiveSession)
+      prevDefault.foreach(SparkSession.setDefaultSession)
+    }
+  }
+
   test("shuffleWidth parses the session conf; the pure parse falls back") {
     assert(GraftSession.shuffleWidth(spark) ==
       spark.conf.get("spark.sql.shuffle.partitions").toInt)
