@@ -130,24 +130,14 @@ object Caching {
     * session cache) and are keyed by session — a long-lived service
     * holds one entry per (helper, table dir).
     *
-    * SOURCE MUTATION: a memoized plan pins its parquet file listing.
-    * The engine's table dirs are immutable by contract (mutation flows
-    * go through [[graft.sources.TxLog]] tables, which are read via the
-    * log, never memoized here) — but a caller that rewrites a plain
-    * dir in place must [[invalidate]] its keys, or the next access
-    * re-persists a plan over deleted files. */
+    * SOURCE MUTATION: a memoized plan pins its parquet file listing,
+    * so plain source directories are immutable: nothing rewrites one in
+    * place. Every mutation flows through a [[graft.sources.TxLog]]
+    * table, which is read through its log and never memoized here. */
   def memoDf(s: SparkSession, key: String, eager: Boolean = false)(
       build: => DataFrame): DataFrame = {
     val df = getOrBuild(s, key)(build)
     if (eager) matOnce(df) else persistOnce(df)
-  }
-
-  /** Drop a memo entry (and its live cache marking, if any) so the
-    * next access rebuilds the plan — required after rewriting a plain
-    * source dir in place (see the source-mutation note above). */
-  def invalidate(s: SparkSession, key: String): Unit = {
-    val df = memo.remove((s, key))
-    if (df != null && df.storageLevel != StorageLevel.NONE) df.unpersist()
   }
 
   /** Memoize a derived frame whose RESULT (not just its construction)

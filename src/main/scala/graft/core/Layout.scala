@@ -130,104 +130,4 @@ object Layout {
 
   def decodeToken(token: String): String =
     new String(Base64.getUrlDecoder.decode(token), StandardCharsets.UTF_8)
-
-  /** Small-file compaction for a hive-partitioned parquet table — the
-    * maintenance pass every incremental-merge table needs at 100 TB:
-    * each micro-batch's dynamic-partition overwrite leaves
-    * shuffle-width-many small files per touched partition, and scan cost
-    * degrades with file count (task-per-file scheduling, footer reads,
-    * no row-group coalescing across files).
-    *
-    * Per partition directory (driver sees only directory METADATA, never
-    * rows): if the file count exceeds what `targetBytes` sizing needs,
-    * rewrite that partition's rows into ceil(bytes/targetBytes) files.
-    * Untouched partitions' files are not read, not rewritten. Rewrites
-    * run per partition (the OPTIMIZE/file-group convention) — a narrow
-    * coalesce, no shuffle. The compacted copy is written to a hidden
-    * temp directory FIRST (source files stay intact and re-readable for
-    * the whole job), then swapped in via delete+rename: a writer
-    * failure before the swap leaves the partition untouched, and a
-    * failure between the delete and the rename leaves the full
-    * compacted copy recoverable in the temp directory — there is no
-    * window where the only copy of the rows is non-fault-tolerant
-    * executor state.
-    *
-    * Not transactional for READERS: one listing the partition during
-    * the metadata swap can see partial state — production tables layer
-    * Delta/Iceberg OPTIMIZE for snapshot isolation; the per-partition
-    * I/O shape is the same.
-    *
-    * Writer safety — DETECT-AND-ABORT, not exclusion: the partition's
-    * file listing is snapshotted before the compacted copy is written
-    * and re-checked immediately before the delete. If a concurrent
-    * writer (e.g. the incremental-merge micro-batch this maintains)
-    * added or replaced files in between, the swap is ABORTED for that
-    * partition — the temp copy is removed, the live files are
-    * untouched, and the partition is simply reported as not compacted
-    * (the next compaction pass picks it up). Two windows REMAIN open
-    * on a plain filesystem and cannot be closed by re-listing: a write
-    * landing between the final re-list and the delete is lost with the
-    * directory, and a same-name same-length replacement within the
-    * filesystem's mtime granularity passes the listing compare. Plain
-    * layouts must therefore schedule compaction in the writer's
-    * maintenance window (single-writer discipline), which is the
-    * operating assumption of every plain-parquet maintainer here. When
-    * writers and compaction must genuinely overlap, use the
-    * transaction-log table's [[graft.sources.TxLog.compact]]: its
-    * commit protocol makes the conflict a version race that the loser
-    * RETRIES, so lost updates are impossible rather than detected.
-    *
-    * Returns the partition directory names that were compacted. */
-  def compactPartitions(spark: org.apache.spark.sql.SparkSession,
-      tablePath: String, partitionCol: String,
-      targetBytes: Long = 128L * 1024 * 1024,
-      // test seam: runs after the compacted copy is written and before
-      // the pre-swap re-listing, where a concurrent write would race
-      afterCopy: String => Unit = _ => ()): Seq[String] = {
-    val hPath = new org.apache.hadoop.fs.Path(tablePath)
-    val fs = hPath.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(hPath)) return Seq.empty
-    val partDirs = fs.listStatus(hPath).filter(_.isDirectory)
-      .map(_.getPath)
-      .filter(_.getName.startsWith(s"$partitionCol="))
-    val compacted = partDirs.flatMap { pd =>
-      val files = fs.listStatus(pd)
-        .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-      val bytes = files.map(_.getLen).sum
-      val targetN = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
-      if (files.length <= targetN) None
-      else {
-        // reading the partition DIRECTORY yields the data columns only
-        // (no partition column) — exactly what its rewritten files must
-        // contain under hive layout. The dot-prefixed temp dir is
-        // invisible to parquet listings of the table root.
-        val tmp = new org.apache.hadoop.fs.Path(hPath,
-          s".compact_tmp_${pd.getName}")
-        // snapshot of (name, length, mtime) the compacted copy is built
-        // from — compared against a fresh listing right before the swap
-        def listing() = fs.listStatus(pd)
-          .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-          .map(f => (f.getPath.getName, f.getLen, f.getModificationTime))
-          .toSet
-        val before = listing()
-        spark.read.parquet(pd.toString).coalesce(targetN)
-          .write.mode("overwrite").parquet(tmp.toString)
-        afterCopy(pd.getName)
-        if (listing() != before) {
-          // a concurrent writer touched the partition while the copy was
-          // being built — swapping would silently drop its files. Abort:
-          // the live partition is intact, only the temp copy is discarded.
-          fs.delete(tmp, true)
-          None
-        } else {
-          fs.delete(pd, true)
-          if (!fs.rename(tmp, pd))
-            throw new java.io.IOException(
-              s"compaction swap failed: compacted copy preserved at $tmp")
-          Some(pd.getName)
-        }
-      }
-    }
-    compacted.toSeq.sorted
-  }
 }

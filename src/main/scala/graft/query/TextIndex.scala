@@ -32,21 +32,19 @@ object TextIndex {
 
   /** path+column → postings side-TABLE location. The postings are a
     * maintained index in production (the indexer appends a file's
-    * trigram rows when it writes the file), so they persist as PARQUET,
-    * not as an in-session cache — queries pay the lookup join, never
-    * the build, and a cleared session cache cannot silently re-charge
-    * the build to the next search. */
+    * trigram rows when it writes the file), so they persist as a
+    * [[graft.sources.TxLog]] table, not as an in-session cache — queries
+    * pay the lookup join, never the build, and a cleared session cache
+    * cannot silently re-charge the build to the next search. */
   private val cache = new ConcurrentHashMap[String, String]()
 
-  /** Per-process scope token for the side-table directory. The in-memory
-    * location cache is per-JVM, so a second JVM would rebuild (and
-    * previously OVERWRITE) the shared deterministic location while the
-    * first could be mid-read — two parallel test/bench runs racing on
-    * mode(overwrite). Scoping the directory per process removes the
-    * cross-JVM race at zero extra cost: the other JVM was going to
-    * rebuild anyway (its cache map starts empty). In production the
-    * postings are a writer-maintained table at a managed location, not a
-    * tmpdir artifact. */
+  /** Per-process scope token for the ad-hoc side-table directory. The
+    * in-memory location cache is per-JVM, so a second JVM rebuilds the
+    * postings anyway (its cache map starts empty); scoping the directory
+    * per process keeps that rebuild from deleting a location the first
+    * JVM could be mid-read. In production the postings are a
+    * writer-maintained table at a [[manage]]d location, not a tmpdir
+    * artifact. */
   private val processScope =
     java.lang.management.ManagementFactory.getRuntimeMXBean.getName
       .replaceAll("[^A-Za-z0-9]", "-")
@@ -66,17 +64,16 @@ object TextIndex {
   def activeLocation(path: String, textCol: String): Option[String] =
     Option(cache.get(s"$path:$textCol"))
 
-  private def currentPtr(root: org.apache.hadoop.fs.Path) =
-    new org.apache.hadoop.fs.Path(root, "_CURRENT")
+  private def md5Hex(s: String): String =
+    java.security.MessageDigest.getInstance("MD5")
+      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
 
-  private def readCurrent(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path): Option[String] =
-    if (!fs.exists(currentPtr(root))) None
-    else {
-      val in = fs.open(currentPtr(root))
-      try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim)
-      finally in.close()
-    }
+  /** `(file, tri)`: the distinct trigrams of `textCol` per data file of
+    * `df` — the postings rows of a build and of an [[addFiles]]. */
+  private def fileTrigrams(df: DataFrame, textCol: String): DataFrame =
+    df.select(input_file_name().as("file"), trigrams(col(textCol)).as("ts"))
+      .select(col("file"), explode(col("ts")).as("tri"))
+      .distinct()
 
   /** Postings rows shaped for the TxLog postings table: one partition
     * (`bucket` = md5 of the data-file URI) per indexed data file, row
@@ -94,81 +91,51 @@ object TextIndex {
     graft.sources.TxLog.merge(spark, location, txRows(rows),
       keyCol = "_docId", partitionCol = "bucket")
 
+  /** Index every file of the table at `path` into a new postings table at
+    * `location`. An empty corpus still commits the table (schema-only
+    * v0), so later [[addFiles]] and searches go through the TxLog path
+    * uniformly. Touches no [[cache]] entry: [[postings]] runs it inside
+    * `computeIfAbsent`, where a nested `cache.put` would throw. */
+  private def build(spark: SparkSession, path: String, textCol: String,
+      location: String): Unit = {
+    val rows = fileTrigrams(tableDf(spark, path), textCol)
+    if (rows.isEmpty)
+      graft.sources.TxLog.tryCommit(spark, location, 0L, Seq.empty,
+        Seq.empty, Some("_docId STRING,file STRING,tri STRING,bucket STRING"))
+    else mergePostings(spark, location, rows)
+  }
+
   /** Pin the postings side table of (path, textCol) to a MANAGED
     * location (the production shape: the table's writer owns both the
     * data files and the postings, and maintains the latter with
     * [[addFiles]]/[[removeFiles]] as it writes). The location is a
     * [[graft.sources.TxLog]] table partitioned by a per-data-file
-    * bucket, which is what survives every failure mode the previous
-    * generation-swap layout handled case-by-case: readers are snapshot-
-    * isolated against concurrent maintenance, a restarted driver
-    * re-attaches to the committed head, appends after a removal are
-    * ordinary later commits, and removal itself is a METADATA-ONLY
-    * partition drop instead of an O(postings) filter-rewrite. Legacy
-    * layouts (bare parquet postings, or generation dirs + `_CURRENT`
-    * pointer) are migrated into the table on first attach. */
+    * bucket: readers are snapshot-isolated against concurrent
+    * maintenance, a restarted driver re-attaches to the committed head
+    * (no re-index), appends after a removal are ordinary later commits,
+    * and removal is a METADATA-ONLY partition drop. A location with no
+    * committed table is built from the indexed table. */
   def manage(spark: SparkSession, path: String, textCol: String,
       location: String): Unit = {
-    val root = new org.apache.hadoop.fs.Path(location)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!graft.sources.TxLog.isTable(spark, location)) {
-      // adopt a legacy layout's postings without re-indexing the corpus;
-      // an empty root builds from the table
-      val legacy: Option[DataFrame] = readCurrent(fs, root) match {
-        case Some(gen) if fs.exists(new org.apache.hadoop.fs.Path(root, gen)) =>
-          Some(spark.read.parquet(s"$location/$gen"))
-        case _ =>
-          val bare = fs.exists(root) && fs.listStatus(root)
-            .exists(_.getPath.getName.endsWith(".parquet"))
-          if (bare) Some(spark.read.parquet(location)) else None
-      }
-      val rows = legacy.getOrElse(
-        tableDf(spark, path)
-          .select(input_file_name().as("file"),
-            trigrams(col(textCol)).as("ts"))
-          .select(col("file"), explode(col("ts")).as("tri"))
-          .distinct())
-      if (rows.isEmpty)
-        // an empty corpus still commits the table (schema-only v0) so
-        // later addFiles/search go through the TxLog path uniformly
-        graft.sources.TxLog.tryCommit(spark, location, 0L, Seq.empty,
-          Seq.empty, Some("_docId STRING,file STRING,tri STRING,bucket STRING"))
-      else mergePostings(spark, location, rows)
-      // reclaim legacy artifacts (only safe AFTER the committed
-      // migration; a crash in between just leaves them for the next
-      // attach, which adopts the table and cleans again)
-      if (fs.exists(root)) fs.listStatus(root).map(_.getPath).foreach { p =>
-        val n = p.getName
-        if (n.startsWith("gen-") || n == "_CURRENT" ||
-            n.endsWith(".parquet") || n.endsWith(".parquet.crc") ||
-            n == "_SUCCESS" || n.startsWith("._SUCCESS"))
-          fs.delete(p, true)
-      }
-    }
+    if (!graft.sources.TxLog.isTable(spark, location))
+      build(spark, path, textCol, location)
     cache.put(s"$path:$textCol", location)
   }
 
   /** Incremental APPEND: index `newFiles` (paths of data files just
     * added to the table) into the postings side table — one narrow pass
-    * over the new files only. Managed (TxLog) postings commit one merge
-    * into the new files' own partitions (duplicate delivery converges:
-    * the rows are keyed, LWW); unmanaged tmp postings append parquet
-    * (duplicate delivery harmless — the candidate check counts DISTINCT
-    * trigrams). No-op (beyond a build) if the postings don't exist yet —
-    * the build indexes everything anyway. */
+    * over the new files only, committed as one merge into the new
+    * files' own partitions (duplicate delivery converges: the rows are
+    * keyed, LWW). No-op (beyond a build) if the postings don't exist
+    * yet — the build indexes everything anyway. */
   def addFiles(spark: SparkSession, path: String, textCol: String,
       newFiles: Seq[String]): Unit = {
-    val key = s"$path:$textCol"
-    val loc = cache.get(key)
+    val loc = cache.get(s"$path:$textCol")
     if (loc == null) { postings(spark, path, textCol); return }
     if (newFiles.isEmpty) return
-    val rows = spark.read.schema(tableDf(spark, path).schema)
-      .parquet(newFiles: _*)
-      .select(input_file_name().as("file"), trigrams(col(textCol)).as("ts"))
-      .select(col("file"), explode(col("ts")).as("tri"))
-      .distinct()
-    if (graft.sources.TxLog.isTable(spark, loc)) mergePostings(spark, loc, rows)
-    else rows.write.mode("append").parquet(loc)
+    mergePostings(spark, loc, fileTrigrams(
+      spark.read.schema(tableDf(spark, path).schema).parquet(newFiles: _*),
+      textCol))
   }
 
   /** Incremental DELETE: drop the postings of removed data files.
@@ -176,45 +143,14 @@ object TextIndex {
     * intersects with the table's live file listing, so a stale posting
     * row can never resurrect a deleted file into a scan; removal is
     * hygiene that keeps the side table proportional to the live corpus.
-    * Managed (TxLog) postings drop the removed files' partitions as one
-    * METADATA-ONLY commit (nothing read or rewritten — the 100 TB
-    * shape); unmanaged tmp postings keep the filter-rewrite + versioned
-    * location swap. */
+    * The removed files' partitions drop as one METADATA-ONLY commit
+    * (nothing read or rewritten — the 100 TB shape). */
   def removeFiles(spark: SparkSession, path: String, textCol: String,
       removed: Seq[String]): Unit = {
-    val key = s"$path:$textCol"
-    val loc = cache.get(key)
+    val loc = cache.get(s"$path:$textCol")
     if (loc == null || removed.isEmpty) return
-    if (graft.sources.TxLog.isTable(spark, loc)) {
-      val digest = (s: String) => java.security.MessageDigest
-        .getInstance("MD5").digest(s.getBytes("UTF-8"))
-        .map("%02x".format(_)).mkString
-      graft.sources.TxLog.deletePartitions(spark, loc,
-        removed.map(digest).toSet)
-      return
-    }
-    val next = s"$loc-v${java.util.UUID.randomUUID().toString.take(8)}"
-    spark.read.parquet(loc)
-      .filter(!col("file").isin(removed: _*))
-      .write.mode("overwrite").parquet(next)
-    cache.put(key, next)
-    // GENERATIONAL retirement, not immediate deletion: a search that
-    // resolved the old location before this swap may still be
-    // executing its scan — deleting the directory under it would fail
-    // that read. Retiring one generation and deleting the generation
-    // before it bounds garbage to one superseded copy while giving
-    // in-flight readers (bounded by a search's runtime) their files.
-    val prior = retired.put(key, loc)
-    if (prior != null) {
-      val old = new org.apache.hadoop.fs.Path(prior)
-      old.getFileSystem(spark.sessionState.newHadoopConf()).delete(old, true)
-    }
+    graft.sources.TxLog.deletePartitions(spark, loc, removed.map(md5Hex).toSet)
   }
-
-  /** One superseded postings generation per key, deleted when the NEXT
-    * generation retires it (see [[removeFiles]]). */
-  private val retired =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** Schema of the indexed table, cached per (session, path): the FILE
     * LISTING must stay fresh (append/delete mutate the table), but the
@@ -239,14 +175,6 @@ object TextIndex {
       }
     }
   }
-
-  private def buildTo(spark: SparkSession, path: String, textCol: String,
-      out: String): Unit =
-    tableDf(spark, path)
-      .select(input_file_name().as("file"), trigrams(col(textCol)).as("ts"))
-      .select(col("file"), explode(col("ts")).as("tri"))
-      .distinct()
-      .write.mode("overwrite").parquet(out)
 
   /** Maintain the postings of a [[graft.sources.TxLog]] doc table from
     * its commit history — the search-index half of the CDC lifecycle
@@ -279,11 +207,7 @@ object TextIndex {
     // loop doubles as their vacuum — superseded postings files older
     // than the default grace are reclaimed here, keeping the side table
     // proportional to the live corpus across unbounded maintenance
-    cache.get(s"$tablePath:$textCol") match {
-      case loc: String if graft.sources.TxLog.isTable(spark, loc) =>
-        graft.sources.TxLog.vacuum(spark, loc)
-      case _ => ()
-    }
+    graft.sources.TxLog.vacuum(spark, cache.get(s"$tablePath:$textCol"))
     head.version
   }
 
@@ -309,23 +233,21 @@ object TextIndex {
 
   /** `(file, tri)` postings of `textCol` over a parquet directory —
     * built once per (path, column) and stored as a side table: the
-    * committed snapshot of a [[manage]]d TxLog postings table, or an
-    * ad-hoc parquet dir under the tmpdir otherwise. */
+    * committed snapshot of a [[manage]]d TxLog postings table, or of the
+    * same TxLog table built ad hoc under the tmpdir on first use. */
   def postings(spark: SparkSession, path: String, textCol: String): DataFrame = {
     val loc = cache.computeIfAbsent(s"$path:$textCol", { key =>
       // full-width digest of the key — a 32-bit hashCode could collide
       // across tables sharing the tmpdir and silently cross postings
-      val digest = java.security.MessageDigest.getInstance("MD5")
-        .digest(key.getBytes("UTF-8")).map("%02x".format(_)).mkString
-      val out = new java.io.File(
-        System.getProperty("java.io.tmpdir"),
-        s"graft-triidx-$digest-$processScope").getPath
-      buildTo(spark, path, textCol, out)
-      out
+      val out = new org.apache.hadoop.fs.Path(System.getProperty("java.io.tmpdir"),
+        s"graft-triidx-${md5Hex(key)}-$processScope")
+      // a table left here by an earlier build (before an invalidate, or
+      // by a previous process with the same pid) is rebuilt from scratch
+      out.getFileSystem(spark.sessionState.newHadoopConf()).delete(out, true)
+      build(spark, path, textCol, out.toString)
+      out.toString
     })
-    if (graft.sources.TxLog.isTable(spark, loc))
-      graft.sources.TxLog.read(spark, loc).select("file", "tri")
-    else spark.read.parquet(loc)
+    graft.sources.TxLog.read(spark, loc).select("file", "tri")
   }
 
   /** Trigrams the pattern REQUIRES: every literal segment (between
@@ -335,38 +257,25 @@ object TextIndex {
     pattern.toLowerCase.split("[*?]").filter(_.length >= 3)
       .flatMap(seg => seg.sliding(3)).toSet
 
-  /** Driver-side postings snapshot: `loc → (fingerprint, tri → files)`.
+  /** Driver-side postings snapshot: `loc → (version, tri → files)`.
     * The pruning decision is index METADATA — exactly what a lakehouse
     * keeps on the driver (Delta's per-file stats live in the driver
     * snapshot the same way), and re-running a small Spark job per query
     * to consult it charged every search a fixed ~0.3 s of datasource
     * setup. Bounded: snapshots above [[SnapshotMaxRows]] postings rows
     * fall back to the join path (a 100 TB corpus with millions of files
-    * keeps the index distributed); staleness is caught by the
-    * fingerprint (TxLog version for managed tables, the file listing
-    * digest for ad-hoc dirs), so an [[addFiles]]/[[removeFiles]] swap
-    * invalidates the cached map. */
+    * keeps the index distributed); staleness is caught by the postings
+    * table's committed version, so an [[addFiles]]/[[removeFiles]]
+    * commit invalidates the cached map. */
   private final val SnapshotMaxRows = 2000000L
   private val postingsSnapshots =
-    new ConcurrentHashMap[String, (String, Map[String, Array[String]])]()
-
-  private def postingsFingerprint(spark: SparkSession, loc: String): String =
-    if (graft.sources.TxLog.isTable(spark, loc))
-      s"tx:${graft.sources.TxLog.snapshot(spark, loc).version}"
-    else {
-      val p = new org.apache.hadoop.fs.Path(loc)
-      val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-      val parts = fs.listStatus(p).filter(_.getPath.getName.endsWith(".parquet"))
-        .map(st => s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}")
-        .sorted
-      s"fs:${parts.mkString(",").hashCode}:${parts.length}"
-    }
+    new ConcurrentHashMap[String, (Long, Map[String, Array[String]])]()
 
   private def postingsMap(spark: SparkSession, path: String,
       textCol: String): Option[Map[String, Array[String]]] = {
     val df = postings(spark, path, textCol) // ensures the loc is populated
     val key = cache.get(s"$path:$textCol")
-    val fp = postingsFingerprint(spark, key)
+    val fp = graft.sources.TxLog.snapshot(spark, key).version
     val hit = postingsSnapshots.get(key)
     if (hit != null && hit._1 == fp) Some(hit._2)
     else if (df.limit((SnapshotMaxRows + 1).toInt).count() > SnapshotMaxRows)

@@ -41,8 +41,7 @@ import org.json4s.jackson.JsonMethods
   *    create. Losing the race (rename fails because the version exists)
   *    re-reads the log and RETRIES if the winning commits touched
   *    disjoint partitions, else rebuilds the merge from the new
-  *    snapshot — lost updates are impossible, not just unlikely (vs
-  *    [[graft.core.Layout.compactPartitions]], which detects-and-aborts).
+  *    snapshot — lost updates are impossible, not just unlikely.
   *
   * Scale notes: the log holds file METADATA only (path, partition, row
   * count, per-file key min/max) — driver-sized by design, same as
@@ -1203,7 +1202,9 @@ object TxLog {
           ph -> (JString(lg): JValue) }): JValue)).toList
     val body = JsonMethods.compact(JsonMethods.render(JObject(fields: _*)))
     val coordinator = coordinatorOf(path)
-    val ok = coordinator.tryPublish(fs, commitPath(table, version), body)
+    val dest = commitPath(table, version)
+    val ok = coordinator.tryPublish(fs, dest, body)
+    if (!ok) awaitPublished(fs, dest)
     if (ok && version > 0 && version % CheckpointInterval == 0) {
       try {
         val snap = snapshot(spark, path)
@@ -1224,6 +1225,26 @@ object TxLog {
       } catch { case _: Exception => () }
     }
     ok
+  }
+
+  /** How long a writer that lost a version waits for the winner's commit
+    * file to become visible before re-reading the log anyway. */
+  private val PublishWaitMs = 10000L
+
+  /** A lost publish means another writer owns `dest`, but a conditional-put
+    * coordinator decides the winner BEFORE its file is written. A loser
+    * that re-read the log at once would still see the old head, race the
+    * same version again and burn one retry per re-read — a winner stalled
+    * for a GC pause could exhaust a merge's `maxAttempts` on nothing. So
+    * wait (bounded, backing off) until the winning commit is visible.
+    * Rename-based coordinators only lose to an existing file: no wait. */
+  private def awaitPublished(fs: FileSystem, dest: Path): Unit = {
+    val deadline = System.nanoTime() + PublishWaitMs * 1000000L
+    var sleepMs = 1L
+    while (!fs.exists(dest) && System.nanoTime() < deadline) {
+      Thread.sleep(sleepMs)
+      sleepMs = math.min(sleepMs * 2, 50L)
+    }
   }
 
   /** MERGE INTO with last-writer-wins semantics, keyed on `keyCol`:
@@ -1890,10 +1911,9 @@ object TxLog {
   /** OPTIMIZE: rewrite each fragmented partition's live files into
     * size-targeted, KEY-CLUSTERED files, as an ordinary optimistic
     * COMMIT (adds the compacted files, removes the inputs). This is the
-    * transactional answer to small-file buildup from per-batch merges —
-    * and, unlike a filesystem-level rewrite
-    * ([[graft.core.Layout.compactPartitions]] on plain layouts, which
-    * can only detect-and-abort around concurrent writers), a concurrent
+    * compaction for maintained tables, the answer to small-file buildup
+    * from per-batch merges. Unlike a filesystem-level rewrite, which can
+    * only detect-and-abort around concurrent writers, a concurrent
     * merge here CONFLICTS at commit time: whoever loses the version
     * race re-reads the log; a compaction whose inputs were replaced
     * restarts from the fresh snapshot, so no concurrent writer's file

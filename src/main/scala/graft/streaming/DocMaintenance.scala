@@ -112,44 +112,8 @@ object DocMaintenance {
     * incremental merge both prune partitions). */
   val DocPartitionCol = "str_databaseid"
 
-  /** ST3/S9 at table scale, PLAIN-PARQUET COMPATIBILITY shim: the same
-    * partition-scoped last-writer-wins merge as [[mergeDocsTx]] — and
-    * since round 7 it IS [[mergeDocsTx]] — followed by an immediate
-    * zero-grace vacuum and empty-partition-dir cleanup, so the table
-    * directory a non-TxLog-aware engine reads directly (plain
-    * `spark.read.parquet`, DuckDB, Trino over the files) equals the
-    * committed head after every call (the `_txlog` dir is
-    * underscore-prefixed and ignored by every parquet reader).
-    *
-    * One write path, two read contracts: the ACID path (readers use
-    * `TxLog.read`, superseded files retained for snapshot isolation /
-    * time travel) is [[mergeDocsTx]]; THIS wrapper trades those
-    * retained files away for external-reader compatibility and is
-    * SINGLE-WRITER (the zero-grace vacuum would reclaim a concurrent
-    * writer's in-flight staging). Previously this was an independent
-    * dynamic-partition-overwrite implementation — two diverging write
-    * paths to the same tables; now the non-ACID variant cannot drift
-    * from the transactional merge semantics. */
-  def mergeDocsIncremental(spark: SparkSession, tablePath: String,
-      updates: DataFrame, removedDocIds: DataFrame = null): Unit = {
-    mergeDocsTx(spark, tablePath, updates, removedDocIds)
-    graft.sources.TxLog.vacuum(spark, tablePath, olderThanMs = -1)
-    // a fully-emptied partition keeps its (now file-less) hive dir after
-    // vacuum; external listers treat a present dir as a present
-    // partition, so drop it
-    val hPath = new org.apache.hadoop.fs.Path(tablePath)
-    val fs = hPath.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.listStatus(hPath)
-      .filter(st => st.isDirectory && st.getPath.getName.contains("="))
-      .foreach { st =>
-        if (!fs.listStatus(st.getPath)
-            .exists(_.getPath.getName.endsWith(".parquet")))
-          fs.delete(st.getPath, true)
-      }
-  }
-
-  /** ST3/S9, ACID — the same partition-scoped last-writer-wins merge as
-    * [[mergeDocsIncremental]], executed as a [[graft.sources.TxLog]]
+  /** ST3/S9 at table scale, ACID — the partition-scoped last-writer-wins
+    * merge of [[mergeDocs]], executed as a [[graft.sources.TxLog]]
     * MERGE INTO: one atomic commit per micro-batch, snapshot-isolated
     * readers (never a partition mid-swap), optimistic retry under
     * concurrent writers. This is the production doc-table path; the
@@ -249,13 +213,20 @@ object DocMaintenance {
       }
       .start()
 
-  /** Run a CDC source as a Structured Streaming query into a doc-table
-    * sink directory, applying the incremental rebuild per micro-batch.
-    * (Parquet-based stand-in for the Delta `MERGE INTO` foreachBatch.) */
-  def streamMaintain(
+  /** Run a CDC source as a Structured Streaming query that maintains the
+    * doc table at `tablePath`: each micro-batch rebuilds the affected docs
+    * and merges them through [[mergeDocsTx]] — one atomic commit per
+    * micro-batch, so a reader concurrent with the stream always sees a
+    * complete snapshot (either before or after a batch, never a
+    * partition mid-swap), and Structured Streaming's at-least-once
+    * redelivery re-commits an identical LWW merge (idempotent by ST3).
+    * Read the maintained table with `TxLog.read`. */
+  def streamMaintainTx(
+      spark: SparkSession,
+      tablePath: String,
       cdc: DataFrame, // streaming DF with CdcColumns
-      snapshot: () => (DataFrame, DataFrame, DataFrame, DataFrame, DataFrame),
-      applyBatch: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
+      snapshot: () => (DataFrame, DataFrame, DataFrame, DataFrame, DataFrame))
+      : org.apache.spark.sql.streaming.StreamingQuery =
     cdc.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, _: Long) =>
@@ -268,24 +239,8 @@ object DocMaintenance {
           if (batch.columns.contains("assetLinkId"))
             affectedKeysWithLinkMeta(batch, links)
           else affectedKeys(batch)
-        applyBatch(rebuildChanged(changed, assets, buckets, metadata, versions, links))
+        mergeDocsTx(spark, tablePath,
+          rebuildChanged(changed, assets, buckets, metadata, versions, links))
       }
       .start()
-
-  /** The PRODUCTION wiring of [[streamMaintain]]: each micro-batch's
-    * rebuilt docs merge into a [[graft.sources.TxLog]] table through
-    * [[mergeDocsTx]] — one atomic commit per micro-batch, so a reader
-    * concurrent with the stream always sees a complete snapshot
-    * (either before or after a batch, never a partition mid-swap), and
-    * Structured Streaming's at-least-once redelivery re-commits an
-    * identical LWW merge (idempotent by ST3). Read the maintained
-    * table with `TxLog.read`. */
-  def streamMaintainTx(
-      spark: SparkSession,
-      tablePath: String,
-      cdc: DataFrame, // streaming DF with CdcColumns
-      snapshot: () => (DataFrame, DataFrame, DataFrame, DataFrame, DataFrame))
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    streamMaintain(cdc, snapshot,
-      rebuilt => mergeDocsTx(spark, tablePath, rebuilt))
 }

@@ -7,7 +7,7 @@ package graft.streaming
   * boundaries where this engine actually calls out: a rate-limited
   * model-inference endpoint inside `mapPartitions`
   * ([[graft.llmops.Inference]]) or a throttled sink in a `foreachBatch`
-  * handler ([[ChangeFeed.follow]] / [[DocMaintenance.streamMaintain]]).
+  * handler ([[ChangeFeed.follow]] / [[DocMaintenance.streamMaintainTx]]).
   *
   * Scale note: backoff sleeps on the EXECUTOR task (or the driver's
   * foreachBatch thread) — it never blocks other partitions, and jitter

@@ -47,58 +47,6 @@ class LayoutSpec extends SparkSpec {
     assert(plan.contains("_salt"), plan.take(1500))
   }
 
-  test("compaction rewrites only over-filed partitions and preserves rows") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-compact").toString
-    // partition a: 10 small files; partition b: already 1 file
-    val a = (1 to 1000).map(i => ("a", i.toLong, s"row$i")).toDF("p", "id", "v")
-    val b = (1 to 500).map(i => ("b", i.toLong, s"row$i")).toDF("p", "id", "v")
-    a.repartition(10).write.partitionBy("p").mode("append").parquet(dir)
-    b.coalesce(1).write.partitionBy("p").mode("append").parquet(dir)
-    def files(part: String): Set[String] = {
-      val d = new java.io.File(s"$dir/p=$part")
-      d.listFiles().filter(_.getName.endsWith(".parquet")).map(_.getName).toSet
-    }
-    val before = spark.read.parquet(dir).orderBy("p", "id")
-      .as[(Long, String, String)].collect().toSeq
-    val bFilesBefore = files("b")
-    assert(files("a").size == 10 && bFilesBefore.size == 1)
-
-    val compacted = Layout.compactPartitions(spark, dir, "p",
-      targetBytes = 1L << 30)
-    assert(compacted == Seq("p=a"), compacted.toString)
-    assert(files("a").size == 1)
-    assert(files("b") == bFilesBefore) // untouched partition: same files
-    val after = spark.read.parquet(dir).orderBy("p", "id")
-      .as[(Long, String, String)].collect().toSeq
-    assert(after == before)
-    // idempotent: a second pass finds nothing to do
-    assert(Layout.compactPartitions(spark, dir, "p", 1L << 30).isEmpty)
-  }
-
-  test("compaction aborts a partition a concurrent writer touched") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-compact-race").toString
-    val a = (1 to 1000).map(i => ("a", i.toLong, s"row$i")).toDF("p", "id", "v")
-    a.repartition(10).write.partitionBy("p").mode("append").parquet(dir)
-    // a writer appends to the partition between the compacted-copy write
-    // and the swap: the swap must ABORT (no files lost), not clobber
-    val concurrent = Seq(("a", 9999L, "late")).toDF("p", "id", "v")
-    val compacted = Layout.compactPartitions(spark, dir, "p",
-      targetBytes = 1L << 30,
-      afterCopy = _ => concurrent.coalesce(1)
-        .write.partitionBy("p").mode("append").parquet(dir))
-    assert(compacted.isEmpty, s"swap should have aborted: $compacted")
-    // every row — including the concurrently written one — is readable
-    assert(spark.read.parquet(dir).count() === 1001)
-    assert(spark.read.parquet(dir).filter(col("id") === 9999L).count() === 1)
-    // no leftover temp directory
-    assert(!new java.io.File(dir).listFiles()
-      .exists(_.getName.startsWith(".compact_tmp")))
-    // with no racing writer the next pass compacts normally
-    val second = Layout.compactPartitions(spark, dir, "p", 1L << 30)
-    assert(second == Seq("p=a"))
-    assert(spark.read.parquet(dir).count() === 1001)
-  }
-
   test("zValue interleaves bin bits (x odd positions, y even)") {
     // x=0b011 → bits at positions 1,3 → 0b01010; y=0b101 → positions
     // 0,4 → 0b10001; z = 0b11011 = 27

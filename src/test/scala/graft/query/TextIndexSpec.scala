@@ -103,23 +103,29 @@ class TextIndexSpec extends SparkSpec {
     assert(tris == Set("abc", "bcd"), tris.toString)
   }
 
-  test("incremental maintenance: append indexes only the new file; delete swaps without rebuild") {
+  /** Append, duplicate append and removal on the postings of a fresh
+    * two-file table: `managed` attaches a TxLog location first, else the
+    * first search builds the ad-hoc postings under the tmpdir. */
+  private def incrementalMaintenance(managed: Boolean): Unit = {
     import spark.implicits._
+    import graft.sources.TxLog
     val tdir = java.nio.file.Files.createTempDirectory("graft-tinc").toString
-    val pdir = java.nio.file.Files.createTempDirectory("graft-tinc-idx").toString
     Seq((1L, "alpha bravo charlie"), (2L, "delta echo foxtrot"))
       .toDF("id", "text").repartition(2)
       .write.mode("overwrite").parquet(tdir)
-    // managed location: the postings live as a TxLog table partitioned
-    // per data file
-    TextIndex.manage(spark, tdir, "text", pdir)
-    assert(graft.sources.TxLog.isTable(spark, pdir))
-    def idxFiles() = graft.sources.TxLog.snapshot(spark, pdir)
+    def hits(p: String) = TextIndex.prunedSearch(spark, tdir, "text", p)
+      .select("id").as[Long].collect().toSet
+    if (managed) TextIndex.manage(spark, tdir, "text",
+      java.nio.file.Files.createTempDirectory("graft-tinc-idx").toString)
+    else assert(hits("alpha") == Set(1L))
+    // either way the postings live as a TxLog table partitioned per
+    // data file
+    val pdir = TextIndex.activeLocation(tdir, "text").get
+    assert(TxLog.isTable(spark, pdir))
+    def idxFiles() = TxLog.snapshot(spark, pdir)
       .files.map(f => f.path -> f.rows).toMap
     val builtFiles = idxFiles()
     assert(builtFiles.nonEmpty)
-    def hits(p: String) = TextIndex.prunedSearch(spark, tdir, "text", p)
-      .select("id").as[Long].collect().toSet
 
     // a new data file arrives; the stale index cannot see it yet
     val before = new java.io.File(tdir).listFiles().map(_.getName).toSet
@@ -152,16 +158,45 @@ class TextIndexSpec extends SparkSpec {
       new java.io.File(f).getParent, "." + new java.io.File(f).getName + ".crc"))
     crcs.foreach(c => if (c.exists()) c.delete())
     assert(hits("zebrafish").isEmpty)
-    // ...and removeFiles is the hygiene pass that drops the stale rows
+    // ...and removeFiles is the hygiene pass that drops the stale rows,
+    // as one metadata-only partition drop (the commit adds nothing)
     val liveUri = spark.read.parquet(tdir).inputFiles.toSet
     val stale = TextIndex.postings(spark, tdir, "text")
       .select("file").distinct().as[String].collect().filterNot(liveUri)
     assert(stale.nonEmpty)
+    val vBefore = TxLog.snapshot(spark, pdir)
     TextIndex.removeFiles(spark, tdir, "text", stale.toSeq)
+    val vAfter = TxLog.snapshot(spark, pdir)
+    assert(vAfter.version == vBefore.version + 1)
+    assert(vAfter.files.toSet.subsetOf(vBefore.files.toSet),
+      "partition drop rewrote postings data")
     val remaining = TextIndex.postings(spark, tdir, "text")
       .select("file").distinct().as[String].collect().toSet
     assert(remaining.subsetOf(liveUri))
-    assert(hits("alpha") == Set(1L)) // searches still work after the swap
+    assert(hits("alpha") == Set(1L)) // searches still work after the drop
+  }
+
+  test("incremental maintenance: append indexes only the new file; delete swaps without rebuild") {
+    incrementalMaintenance(managed = true)
+  }
+
+  test("incremental maintenance on ad-hoc postings built by the first search") {
+    incrementalMaintenance(managed = false)
+  }
+
+  test("ad-hoc postings over an empty table: a schema-only TxLog table, no rows") {
+    import spark.implicits._
+    import graft.sources.TxLog
+    val edir = java.nio.file.Files.createTempDirectory("graft-tie").toString
+    Seq.empty[(Long, String)].toDF("id", "text")
+      .write.mode("overwrite").parquet(edir)
+    val df = TextIndex.prunedSearch(spark, edir, "text", "quick")
+    assert(df.count() == 0)
+    assert(df.schema == spark.read.parquet(edir).schema)
+    val loc = TextIndex.activeLocation(edir, "text").get
+    assert(TxLog.isTable(spark, loc))
+    val snap = TxLog.snapshot(spark, loc)
+    assert(snap.version == 0L && snap.files.isEmpty)
   }
 
   test("managed postings survive restart; removal is metadata-only; appends after removal persist") {
@@ -217,31 +252,6 @@ class TextIndexSpec extends SparkSpec {
       "re-attach rebuilt the postings")
     assert(hits("zebrafish") == Set(3L), "post-removal postings lost on re-attach")
     assert(hits("alpha") == Set(1L))
-  }
-
-  test("manage migrates a legacy generation-pointer postings layout into the TxLog table") {
-    import spark.implicits._
-    val tdir = java.nio.file.Files.createTempDirectory("graft-tmig").toString
-    val pdir = java.nio.file.Files.createTempDirectory("graft-tmig-idx").toString
-    Seq((1L, "alpha bravo"), (2L, "charlie delta")).toDF("id", "text")
-      .write.mode("overwrite").parquet(tdir)
-    // hand-build the PRE-ROUND-7 layout: a generation dir + _CURRENT
-    spark.read.parquet(tdir)
-      .select(input_file_name().as("file"),
-        TextIndex.trigrams(col("text")).as("ts"))
-      .select(col("file"), explode(col("ts")).as("tri")).distinct()
-      .write.mode("overwrite").parquet(s"$pdir/gen-legacy1")
-    val out = new java.io.FileOutputStream(s"$pdir/_CURRENT")
-    try out.write("gen-legacy1".getBytes("UTF-8")) finally out.close()
-
-    TextIndex.manage(spark, tdir, "text", pdir)
-    // adopted WITHOUT re-indexing the corpus, legacy artifacts gone
-    assert(graft.sources.TxLog.isTable(spark, pdir))
-    assert(!new java.io.File(s"$pdir/_CURRENT").exists())
-    assert(!new java.io.File(s"$pdir/gen-legacy1").exists())
-    val got = TextIndex.prunedSearch(spark, tdir, "text", "charlie")
-      .select("id").as[Long].collect().toSet
-    assert(got == Set(2L))
   }
 
   test("requiredTrigrams: segments under 3 chars contribute nothing") {

@@ -742,20 +742,67 @@ class TxLogSpec extends SparkSpec {
     } finally TxLog.clearCoordinator(dir)
   }
 
-  test("mergeDocsTx matches mergeDocsIncremental's final state on the same batches") {
+  test("a loser waits out a conditional-put winner that is slow to publish") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-tx-slowput").toString
+    // the claim for v1 is granted at once but its file lands only after
+    // the loser has raced v1 three times (or 2 s): a loser that re-read
+    // the log straight away would still see v0 and spend every retry on
+    // the same claimed version
+    val claims = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val claimed = new java.util.concurrent.CountDownLatch(1)
+    val losses = new java.util.concurrent.atomic.AtomicInteger(0)
+    val slowPut = new CommitCoordinator {
+      def tryPublish(fs: org.apache.hadoop.fs.FileSystem,
+          dest: org.apache.hadoop.fs.Path, body: String): Boolean = {
+        val isV1 = dest.getName == f"${1L}%020d.json"
+        if (!claims.add(dest.toString)) {
+          if (isV1) losses.incrementAndGet()
+          false
+        } else {
+          if (isV1) {
+            claimed.countDown()
+            val until = System.nanoTime() + 2000000000L
+            while (losses.get() < 3 && System.nanoTime() < until)
+              Thread.sleep(5)
+          }
+          val tmp = new org.apache.hadoop.fs.Path(dest.getParent,
+            s".${dest.getName}.cput.tmp")
+          val out = fs.create(tmp, false)
+          try out.write(body.getBytes("UTF-8")) finally out.close()
+          fs.rename(tmp, dest)
+        }
+      }
+    }
+    TxLog.setCoordinator(dir, slowPut)
+    try {
+      TxLog.merge(spark, dir, docs(("dbA#a1", "dbA", "seed")))
+      import scala.concurrent.{Await, Future}
+      import scala.concurrent.duration._
+      import scala.concurrent.ExecutionContext.Implicits.global
+      val winner = Future(TxLog.merge(spark, dir, docs(("dbA#k1", "dbA", "v1"))))
+      assert(claimed.await(120, java.util.concurrent.TimeUnit.SECONDS))
+      TxLog.merge(spark, dir, docs(("dbA#k2", "dbA", "v2")), maxAttempts = 3)
+      Await.result(winner, 120.seconds)
+      assert(losses.get() >= 1) // the loser really raced the claimed version
+      assert(tableRows(dir) == Set(("dbA#a1", "seed"), ("dbA#k1", "v1"),
+        ("dbA#k2", "v2")))
+      assert(TxLog.snapshot(spark, dir).version == 2L)
+    } finally TxLog.clearCoordinator(dir)
+  }
+
+  test("mergeDocsTx matches the in-memory mergeDocs reference on the same batches") {
     val txDir = java.nio.file.Files.createTempDirectory("graft-tx8a").toString
-    val plainDir = java.nio.file.Files.createTempDirectory("graft-tx8b").toString
     val seed = docs(("dbA#a1", "dbA", "a1v1"), ("dbA#a2", "dbA", "a2v1"),
       ("dbB#b1", "dbB", "b1v1"))
     val batch = docs(("dbA#a1", "dbA", "a1v2"), ("dbC#c1", "dbC", "c1v1"))
     val removed = Seq("dbA#a2").toDF("_docId")
     DocMaintenance.mergeDocsTx(spark, txDir, seed)
     DocMaintenance.mergeDocsTx(spark, txDir, batch, removed)
-    DocMaintenance.mergeDocsIncremental(spark, plainDir, seed)
-    DocMaintenance.mergeDocsIncremental(spark, plainDir, batch, removed)
-    val plain = spark.read.parquet(plainDir)
+    val reference = DocMaintenance.mergeDocs(seed, batch, removed)
       .select("_docId", "payload").as[(String, String)].collect().toSet
-    assert(tableRows(txDir) == plain)
+    assert(reference == Set(("dbA#a1", "a1v2"), ("dbB#b1", "b1v1"),
+      ("dbC#c1", "c1v1")))
+    assert(tableRows(txDir) == reference)
     // and the tx table's partition column round-trips through the read
     assert(TxLog.read(spark, txDir).select("str_databaseid").distinct()
       .as[String].collect().toSet == Set("dbA", "dbB", "dbC"))

@@ -229,55 +229,38 @@ class DocMaintenanceSpec extends SparkSpec {
     assert(submitted2.keySet == Set(("dbL", "live1"), ("db1", "a1")))
   }
 
-  test("mergeDocsIncremental rewrites only touched partitions; redelivery converges") {
+  test("mergeDocsTx rewrites only touched partitions; redelivery converges") {
+    import graft.sources.TxLog
     val dir = java.nio.file.Files.createTempDirectory("graft-docs").toString
     def docs(rows: (String, String, String)*) =
       rows.toSeq.toDF("_docId", "str_databaseid", "payload")
     // seed: two partitions
-    DocMaintenance.mergeDocsIncremental(spark, dir,
+    DocMaintenance.mergeDocsTx(spark, dir,
       docs(("dbA#a1", "dbA", "a1v1"), ("dbA#a2", "dbA", "a2v1"),
         ("dbB#b1", "dbB", "b1v1")))
-    def partFiles(p: String): Map[String, Long] = {
-      val d = new java.io.File(dir, s"str_databaseid=$p")
-      if (!d.exists()) Map.empty
-      else d.listFiles().filter(_.getName.endsWith(".parquet"))
-        .map(f => f.getName -> f.lastModified()).toMap
-    }
+    def partFiles(p: String) =
+      TxLog.snapshot(spark, dir).files.filter(_.partition == p).toSet
     val dbBBefore = partFiles("dbB")
     assert(dbBBefore.nonEmpty)
     // update touches dbA only (+ a brand-new partition dbC)
     val batch = docs(("dbA#a1", "dbA", "a1v2"), ("dbC#c1", "dbC", "c1v1"))
     val removed = Seq("dbA#a2").toDF("_docId")
-    DocMaintenance.mergeDocsIncremental(spark, dir, batch, removed)
-    val read = spark.read.parquet(dir)
+    DocMaintenance.mergeDocsTx(spark, dir, batch, removed)
+    def rows() = TxLog.read(spark, dir)
       .select("_docId", "payload").as[(String, String)].collect().toSet
+    val read = rows()
     assert(read == Set(("dbA#a1", "a1v2"), ("dbB#b1", "b1v1"),
       ("dbC#c1", "c1v1")))
-    // the untouched partition's files were not rewritten
+    // the untouched partition's snapshot files were not rewritten
     assert(partFiles("dbB") == dbBBefore,
       s"dbB files changed: ${partFiles("dbB")} vs $dbBBefore")
     // redelivery of the same batch converges to the same table
-    DocMaintenance.mergeDocsIncremental(spark, dir, batch, removed)
-    val again = spark.read.parquet(dir)
-      .select("_docId", "payload").as[(String, String)].collect().toSet
-    assert(again == read)
-  }
-
-  test("mergeDocsIncremental deletes a fully-removed partition") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-docs2").toString
-    def docs(rows: (String, String, String)*) =
-      rows.toSeq.toDF("_docId", "str_databaseid", "payload")
-    DocMaintenance.mergeDocsIncremental(spark, dir,
-      docs(("dbA#a1", "dbA", "x"), ("dbB#b1", "dbB", "y")))
-    DocMaintenance.mergeDocsIncremental(spark, dir,
-      docs(), Seq("dbB#b1").toDF("_docId"))
-    val left = spark.read.parquet(dir)
-      .select("_docId").as[String].collect().toSet
-    assert(left == Set("dbA#a1"))
-    assert(!new java.io.File(dir, "str_databaseid=dbB").exists())
+    DocMaintenance.mergeDocsTx(spark, dir, batch, removed)
+    assert(rows() == read)
   }
 
   test("end-to-end: CDC stream → affected keys → incremental rebuild → partition-scoped merge") {
+    import graft.sources.TxLog
     val cdcDir = java.nio.file.Files.createTempDirectory("graft-cdc").toString
     val docsDir = java.nio.file.Files.createTempDirectory("graft-docstore").toString
     val assets = mkAssets(("db1", "a1", "One"), ("db1", "a2", "Two"),
@@ -286,14 +269,10 @@ class DocMaintenanceSpec extends SparkSpec {
       .toDF("assetLinkId", "fromDatabaseId", "fromAssetId", "toDatabaseId",
         "toAssetId", "relationshipType", "assetLinkAliasId")
     // seed the doc table with a full build
-    DocMaintenance.mergeDocsIncremental(spark, docsDir,
+    DocMaintenance.mergeDocsTx(spark, docsDir,
       graft.docs.DocBuilder.buildAssetDocs(assets, buckets, emptyMd, emptyVer, links))
-    def dbFiles(p: String): Map[String, Long] = {
-      val d = new java.io.File(docsDir, s"str_databaseid=$p")
-      if (!d.exists()) Map.empty
-      else d.listFiles().filter(_.getName.endsWith(".parquet"))
-        .map(f => f.getName -> f.lastModified()).toMap
-    }
+    def dbFiles(p: String) =
+      TxLog.snapshot(spark, docsDir).files.filter(_.partition == p).toSet
     val db2Before = dbFiles("db2")
     assert(db2Before.nonEmpty)
     // stream one CDC batch: metadata change on db1/a2 (child of a1)
@@ -303,12 +282,11 @@ class DocMaintenanceSpec extends SparkSpec {
         "fromDatabaseId", "fromAssetId", "toDatabaseId", "toAssetId")
     batch.write.mode("overwrite").parquet(cdcDir)
     val cdc = spark.readStream.schema(batch.schema).parquet(cdcDir)
-    val q = DocMaintenance.streamMaintain(cdc,
-      () => (assets, buckets, emptyMd, emptyVer, links),
-      rebuilt => DocMaintenance.mergeDocsIncremental(spark, docsDir, rebuilt))
+    val q = DocMaintenance.streamMaintainTx(spark, docsDir, cdc,
+      () => (assets, buckets, emptyMd, emptyVer, links))
     try q.processAllAvailable() finally q.stop()
     // the rebuilt child doc kept its parent flag (incoming edge survived)
-    val row = spark.read.parquet(docsDir)
+    val row = TxLog.read(spark, docsDir)
       .filter(col("_docId") === "db1#a2")
       .select("bool_has_asset_parents").as[Boolean].collect().toSeq
     assert(row == Seq(true))
