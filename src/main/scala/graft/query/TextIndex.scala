@@ -92,18 +92,14 @@ object TextIndex {
       keyCol = "_docId", partitionCol = "bucket")
 
   /** Index every file of the table at `path` into a new postings table at
-    * `location`. An empty corpus still commits the table (schema-only
-    * v0), so later [[addFiles]] and searches go through the TxLog path
-    * uniformly. Touches no [[cache]] entry: [[postings]] runs it inside
-    * `computeIfAbsent`, where a nested `cache.put` would throw. */
+    * `location`. An empty corpus still commits the table (the merge of
+    * an empty batch is a schema-only v0), so later [[addFiles]] and
+    * searches go through the TxLog path uniformly. Touches no [[cache]]
+    * entry: [[postings]] runs it inside `computeIfAbsent`, where a
+    * nested `cache.put` would throw. */
   private def build(spark: SparkSession, path: String, textCol: String,
-      location: String): Unit = {
-    val rows = fileTrigrams(tableDf(spark, path), textCol)
-    if (rows.isEmpty)
-      graft.sources.TxLog.tryCommit(spark, location, 0L, Seq.empty,
-        Seq.empty, Some("_docId STRING,file STRING,tri STRING,bucket STRING"))
-    else mergePostings(spark, location, rows)
-  }
+      location: String): Unit =
+    mergePostings(spark, location, fileTrigrams(tableDf(spark, path), textCol))
 
   /** Pin the postings side table of (path, textCol) to a MANAGED
     * location (the production shape: the table's writer owns both the

@@ -35,7 +35,7 @@ object CurationQueries {
   /** Per-doc bigram-LM score aggregates `(doc_id, n_bigrams, score_fp)`
     * under the English-reference add-1 bigram model — the shared
     * builder for llm_quality_lmscore and the curation funnel's LM gate.
-    * PINNED (matOnce) at the return: every consumer references this
+    * PINNED (eager memo) at the return: every consumer references this
     * frame at least twice — once under the `broadcast(total)` scalar
     * and once as the stream side of the gate — and Catalyst does not
     * CSE plan subtrees, so the unpinned form executed the whole bigram
@@ -45,26 +45,11 @@ object CurationQueries {
     * under `count()`, which prunes the provably-unique left joins and
     * hid the recomputation entirely (see Bench.timedPass). Under full
     * materialization the doc-sized cache write is strictly cheaper
-    * than a second bigram pass. */
+    * than a second bigram pass. The memo also spares the ~60-node
+    * chain's re-analysis (measured ~0.3 s of analysis per call). */
   private def lmScores(s: SparkSession, d: String): DataFrame =
-    // construction memo on top of the materialization pin: the chain is
-    // ~60 plan nodes and every consumer invocation re-ran the Analyzer
-    // over it (measured ~0.3 s driver time per call); the memo returns
-    // the same analyzed Dataset and matOnce re-pins it per cache
-    // generation (the eager flag IS matOnce)
-    {
-      // dependency pins OUTSIDE the construction memos (the
-      // dsirBucketCounts guard pattern): the memo builds run once per
-      // session, so anything pinned only inside them never re-pins
-      // after a cache clear. The token cache is referenced by BOTH
-      // memoized plans (the bigram explode, the last-token pass),
-      // and the distinct-bigram table twice within lmScores (unigram
-      // derivation + score join) — each must re-pin per generation.
-      LlmQueries.tokenArrays(s, d)
-      lmQtabRaw(s, d)
-      graft.core.Caching.memoDf(s, s"lmScores:$d", eager = true)(
-        lmScoresPlan(s, d))
-    }
+    graft.core.Caching.memoDf(s, s"lmScores:$d", eager = true)(
+      lmScoresPlan(s, d))
 
   private def lmBigrams: Column = when(size(col("tk")) >= 2,
     transform(sequence(lit(0), size(col("tk")) - 2), i =>
@@ -159,13 +144,6 @@ object CurationQueries {
           count(lit(1)).as("n_bigrams"), sum("q").as("score_fp"))
     }
 
-  /** Per-doc DSIR importance aggregates `(doc_id, n_tokens, weight_fp)`
-    * under the 4096-bucket hashed unigram target/raw models — the
-    * shared builder for llm_mix_dsir and the curation funnel's
-    * selection stage. Session-cached SINCE r9: TopFraction's histogram
-    * + mark passes read the weights twice per query (the single-reader
-    * rationale that kept this uncached, like [[lmScores]], no longer
-    * holds). */
   /** Per-(doc, bucket) token counts `(doc_id, is_t, b, c)` — the ONE
     * pass over the token stream both dsir consumers derive from. The
     * md5-based hash60 per token is the build's dominant cost and the
@@ -174,9 +152,7 @@ object CurationQueries {
     * doc's tokens are contiguous in the cached arrays) halves the hash
     * work and shrinks both downstream inputs. Eager like docGramStats:
     * the two consumers fan into branches of the same job, where a lazy
-    * mark can still double-compute partitions under task overlap.
-    * Accessed OUTSIDE the dsirW memo build so a cleared cache
-    * re-persists bottom-up (the gram-cache guard pattern). */
+    * mark can still double-compute partitions under task overlap. */
   private def dsirBucketCounts(s: SparkSession, d: String): DataFrame =
     graft.core.Caching.memoDf(s, s"dsirDb:$d", eager = true) {
       val m = 4096
@@ -188,13 +164,19 @@ object CurationQueries {
         .groupBy("doc_id", "is_t", "b").agg(count(lit(1)).as("c"))
     }
 
-  private def dsirWeights(s: SparkSession, d: String): DataFrame = {
-    val db = dsirBucketCounts(s, d)
-    // eager like subDupStarts: the funnel pins this chain concurrently
-    // with the LM build; lazy marking deferred the weight fold into
-    // TopFraction's serial histogram pass
+  /** Per-doc DSIR importance aggregates `(doc_id, n_tokens, weight_fp)`
+    * under the 4096-bucket hashed unigram target/raw models — the
+    * shared builder for llm_mix_dsir and the curation funnel's
+    * selection stage. Session-cached SINCE r9: TopFraction's histogram
+    * + mark passes read the weights twice per query (the single-reader
+    * rationale that kept this uncached, like [[lmScores]], no longer
+    * holds). Eager like subDupStarts: the funnel pins this chain
+    * concurrently with the LM build; lazy marking deferred the weight
+    * fold into TopFraction's serial histogram pass. */
+  private def dsirWeights(s: SparkSession, d: String): DataFrame =
     graft.core.Caching.memoDf(s, s"dsirW:$d", eager = true) {
       val m = 4096
+      val db = dsirBucketCounts(s, d)
       val bc = db.groupBy("b").agg(
         sum(when(col("is_t"), col("c")).otherwise(0L)).as("ct"),
         sum(when(!col("is_t"), col("c")).otherwise(0L)).as("cr"))
@@ -217,7 +199,6 @@ object CurationQueries {
         // (measured: warm llm_mix_dsir 0.91 s → 0.58 s at sf0.1)
         .coalesce(math.max(4, graft.core.GraftSession.shuffleWidth(s) / 4))
     }
-  }
 
   // ── llm_quality_train constants (shared by the Spark twin and the
   //    unrolled oracle; see the query comment for the algorithm) ──
@@ -320,19 +301,12 @@ object CurationQueries {
     * query comment for the algorithm and scale notes. */
   /** The trained-and-scored frame, memoized per (corpus, split key):
     * llm_quality_train and llm_mix_classifier share the "all" split, so
-    * within one cache generation the two-step training pays once.
-    * memoDfEpoch (not memoDf): the weight frames inside are EAGERLY
-    * materialized per cache generation (see the matOnce notes below),
-    * and that materialization must re-fire after a clearCache — a
-    * plain plan memo would hand back a stored plan whose weight
-    * subtrees lost their cache marking and re-explode. persistOnce at
-    * access keeps the scored frame itself shared within a generation. */
+    * within one cache generation the two-step training pays once. */
   private def qualityTrainFrame(
       s: SparkSession, d: String,
       trainPred: Column, scorePred: Column,
       splitKey: String): DataFrame =
-   graft.core.Caching.persistOnce(
-   graft.core.Caching.memoDfEpoch(s, s"qtScores:$d:$splitKey") {
+   graft.core.Caching.memoDf(s, s"qtScores:$d:$splitKey") {
     val F = QtF; val S2 = QtS; val C = QtC; val M = QtM
     val stops = Seq("the", "a", "of", "and", "to", "in", "is")
     // label derived ROW-WISE off the shared token cache (r16): the
@@ -420,15 +394,17 @@ object CurationQueries {
     // and each broadcast of an unmaterialized w1 re-executes its
     // subtree — the lazily-composed two-step chain re-scanned the
     // cached feature table ~16× per action (the holdout family's
-    // measured 4.5 s). matOnce pins each step to ONE evaluation per
-    // cache generation; values are untouched (every quantity is an
+    // measured 4.5 s). An eager memo pins each step to ONE evaluation
+    // per cache generation; values are untouched (every quantity is an
     // integer and every sum associative — the bit-identical contract).
-    val w1 = graft.core.Caching.matOnce(step(None))
-    val w2 = graft.core.Caching.matOnce(step(Some(w1)))
+    val w1 = graft.core.Caching.memoDf(s, s"qtW1:$d:$splitKey",
+      eager = true)(step(None))
+    val w2 = graft.core.Caching.memoDf(s, s"qtW2:$d:$splitKey",
+      eager = true)(step(Some(w1)))
     scoresOf(Some(w2), featScore)
       .select(col("doc_id"), col("s").as("score_fp"),
         (col("s") >= 0).as("predicted"), col("y").as("label"))
-   })
+   }
 
   val defs: Seq[QueryDef] = Seq(
 
@@ -501,7 +477,7 @@ object CurationQueries {
           .select(col("doc_id"), col("score_fp"))
           .join(t(s, d, "documents").select("doc_id", "source"), Seq("doc_id"))
         // snapshot = true, RE-MEASURED round 12 after the eager weight
-        // materialization: even with the scored base epoch-persisted,
+        // materialization: even with the scored base memo-persisted,
         // snapshot = false re-ran the scored-frame + documents join
         // for TopFraction's second pass and cost 8.0 s vs 5.3 s at
         // sf0.1 — the narrow checkpoint of (group, score, tie) stays
@@ -948,8 +924,8 @@ object CurationQueries {
         |FROM agg a CROSS JOIN tot t ORDER BY a.doc_id""")(
       (s, d) => {
         // model training + corpus scoring off the shared memo (built
-        // once per session/dir; the funnel's LM gate reads the same
-        // persisted aggregates)
+        // once per cache generation; the funnel's LM gate reads the
+        // same persisted aggregates)
         val agg = lmScores(s, d)
         val tot = agg.agg(sum("score_fp").as("ts"), sum("n_bigrams").as("tn"))
         agg.crossJoin(broadcast(tot))
@@ -1102,8 +1078,8 @@ object CurationQueries {
         // column prune
         val meta = LlmQueries.tokenArrays(s, d)
           .select("doc_id", "lang", "source")
-        // Every stage frame below is doc-id-sized and PINNED (the eager
-        // memoDf re-runs matOnce per cache generation) the moment it
+        // Every stage frame below is doc-id-sized and PINNED (an eager
+        // memoDf, counted once per cache generation) the moment it
         // exists: each stage's plan nests the previous stages' plus a
         // shared-memo build, and the final accounting references all
         // four — Catalyst does not CSE plan subtrees, so the unpinned
@@ -1116,15 +1092,7 @@ object CurationQueries {
         // re-walking the nested funnel plans on every invocation
         // (~1-2 s driver time per bench pass at sf1).
         //
-        // SHARED-DEPENDENCY PINS, OUTSIDE the stage memo builds (the
-        // dsirBucketCounts guard pattern): the build closures run once
-        // per session, so a pin placed inside one would never re-run
-        // after a cache clear — and the stage plans reference these
-        // frames MORE than once (lm appears under both the gate and its
-        // broadcast total), so an unpinned generation recomputes the
-        // bigram chain per reference inside the first stage count
-        // (measured: p2s1 3.1 s vs 1.6 s at sf1).
-        // the three pinned chains are INDEPENDENT given the token cache
+        // The three pinned chains are INDEPENDENT given the token cache
         // (bigram LM; positional-shingle dup starts; DSIR weights) —
         // materialize them concurrently (guide §2.6) so the funnel's
         // wall time is the LONGEST chain, not the sum (measured at

@@ -137,6 +137,16 @@ object LlmQueries {
           Text.tokens(col("text")).as("tk"))
     }
 
+  /** Exact top-5 neighbours `(q_id, rank, cand_id, sim)` of the query
+    * vectors `vec_id < 10`: llm_sim_topk's answer and the recall
+    * baseline of the IVF, maintained-IVF and PQ self-checks, so one
+    * computation per cache generation serves all four. */
+  private[registry] def bruteTopk5(s: SparkSession, d: String): DataFrame =
+    Caching.memoDf(s, s"bruteTopk5:$d") {
+      val e = t(s, d, "embeddings")
+      Similarity.bruteForceTopK(e.filter(col("vec_id") < 10), e, k = 5)
+    }
+
   /** Per-doc gram-set stats in ONE aggregation pass straight off the
     * gram-hash rows — the dedup that the oracle writes as DISTINCT
     * happens inside `collect_set`, and the MinHash fold is
@@ -154,12 +164,8 @@ object LlmQueries {
     // join that ships gram sets across an exchange (sort order and
     // array_intersect semantics are unchanged for non-negative values;
     // consumers needing BIGINT cast back at the projection)
-    // dependency access OUTSIDE the memo build: every call touches the
-    // gram-cache guards in dependency order, so a cleared cache is
-    // re-persisted bottom-up before this layer's materializing count
-    val gh = gramHashes(s, d)
     Caching.memoDf(s, s"docGramStats:$d", eager = true) {
-      gh.groupBy("doc_id")
+      gramHashes(s, d).groupBy("doc_id")
         .agg(sort_array(collect_set(col("g").cast("int"))).as("gs"),
           MinHash.minhash(col("g")).as("sig"))
         .withColumn("n", size(col("gs")).cast("long"))
@@ -435,12 +441,10 @@ object LlmQueries {
     */
   /** Component labels over the SimHash near-dup graph — the shared
     * derived artifact consumed by the components query, cluster stats,
-    * the leakage-safe split, and the curation funnel. The fixpoint's
-    * result lives in checkpoint blocks (not the session cache), so it
-    * is memoized with epoch semantics: one computation per cache
-    * generation, full recompute after a clearCache. */
+    * the leakage-safe split, and the curation funnel: one fixpoint per
+    * cache generation, full recompute after a clearCache. */
   private[registry] def simhashComponents(s: SparkSession, d: String): DataFrame =
-    Caching.memoDfEpoch(s, s"simhashComponents:$d") {
+    Caching.memoDf(s, s"simhashComponents:$d") {
       componentLabels(s, simhashPairs(s, d))
     }
 
@@ -1284,14 +1288,7 @@ object LlmQueries {
         |FROM scored
         |QUALIFY rank <= 5
         |ORDER BY q_id, rank""")(
-      (s, d) => {
-        val e = t(s, d, "embeddings")
-        // shared with llm_sim_ivf's recall baseline — one computation
-        // per cache generation
-        Caching.memoDf(s, s"bruteTopk5:$d") {
-          Similarity.bruteForceTopK(e.filter(col("vec_id") < 10), e, k = 5)
-        }.orderBy("q_id", "rank")
-      }),
+      (s, d) => bruteTopk5(s, d).orderBy("q_id", "rank")),
 
     // ── LSH-bucketed ANN (the scale path). FULLY oracle-gated: the
     //    hyperplanes are pure integer arithmetic (same contract as
@@ -1477,14 +1474,10 @@ object LlmQueries {
       (s, d) => {
         val e = t(s, d, "embeddings")
         val q = e.filter(col("vec_id") < 10)
-        // brute baseline shared with llm_sim_topk (one computation per
-        // cache generation)
         val ivf = Similarity.ivfTopK(q, e, k = 5,
             cacheKey = Some(s"ivfCents:$d"))
           .select("q_id", "cand_id").withColumn("hit", lit(1L))
-        Caching.memoDf(s, s"bruteTopk5:$d") {
-          Similarity.bruteForceTopK(q, e, k = 5)
-        }
+        bruteTopk5(s, d)
           .select("q_id", "cand_id")
           .join(ivf, Seq("q_id", "cand_id"), "left")
           .agg(countDistinct(col("q_id")).as("n_queries"),
@@ -1537,9 +1530,7 @@ object LlmQueries {
         val q = e.filter(col("vec_id") < 10)
         val idx = graft.llmops.IvfIndex.search(s, root, q, k = 5)
           .select("q_id", "cand_id").withColumn("hit", lit(1L))
-        Caching.memoDf(s, s"bruteTopk5:$d") {
-          Similarity.bruteForceTopK(q, e, k = 5)
-        }
+        bruteTopk5(s, d)
           .select("q_id", "cand_id")
           .join(idx, Seq("q_id", "cand_id"), "left")
           .agg(countDistinct(col("q_id")).as("n_queries"),
@@ -1588,9 +1579,7 @@ object LlmQueries {
         val q = e.filter(col("vec_id") < 10)
         val pq = Similarity.pqTopK(q, e, k = 5, cacheKey = Some(s"pqBooks:$d"))
           .select("q_id", "cand_id").withColumn("hit", lit(1L))
-        Caching.memoDf(s, s"bruteTopk5:$d") {
-          Similarity.bruteForceTopK(q, e, k = 5)
-        }
+        bruteTopk5(s, d)
           .select("q_id", "cand_id")
           .join(pq, Seq("q_id", "cand_id"), "left")
           .agg(countDistinct(col("q_id")).as("n_queries"),
@@ -2203,7 +2192,7 @@ object LlmQueries {
     * gram-set verifies keep the join-back path — their payloads are
     * corpus-scale arrays that must not ride 16 band rows per doc.) */
   private[registry] def mmPhashPairs(s: SparkSession, d: String): DataFrame =
-    Caching.memoDfEpoch(s, s"mmPhashPairs:$d") {
+    Caching.memoDf(s, s"mmPhashPairs:$d") {
       val hashes = Multimodal.aHashBands(
         t(s, d, "documents").filter(length(col("text")) >= 64)
           .select(col("doc_id"), col("text")))

@@ -1123,8 +1123,8 @@ object SurfaceQueries {
         // production deployment materializes the rank table once per
         // corpus version (the same persistence rationale as the PQ
         // codebooks and BPE merge tables); the iterative build below
-        // runs once and every later consumer reads the persisted
-        // node-sized result
+        // runs once per cache generation and every later consumer in
+        // it reads the persisted node-sized result
         val ranks = graft.core.Caching.memoDf(s, s"pagerank:$d") {
           val e = t(s, d, "lineitem")
             .select(col("l_orderkey"), col("l_suppkey"))

@@ -8,39 +8,53 @@ import org.apache.spark.storage.StorageLevel
 
 import graft.SparkSpec
 
-/** The memo layer's contracts: one analyzed frame per (session, key),
-  * transparent re-persist after an external cache clear, epoch
-  * invalidation for results the CacheManager cannot see, safety of
-  * memoized builds that derive other memoized frames, and cancellation
-  * of concurrent pins. */
+/** The memo layer's contracts: an entry lives exactly while its frame
+  * is in the session cache (one analyzed frame and one build per
+  * generation, a fresh build after the frame leaves the cache, also for
+  * checkpoint-backed results and for the memoized frames a build
+  * derives), safety of memoized builds that derive other memoized
+  * frames, and cancellation of concurrent pins. Cache generations end
+  * by targeted `unpersist`, not `clearCache`: suites share one session
+  * and run in parallel. */
 class CachingSpec extends SparkSpec {
   import spark.implicits._
 
   private def uniq(prefix: String) =
     s"$prefix-${java.util.UUID.randomUUID().toString.take(8)}"
 
-  test("memoDf returns one analyzed frame per key and re-persists after clearCache") {
-    val key = uniq("spec-memo")
+  // the key rides along as a column, so no other suite's cached frame
+  // shares these plans
+  private def checkGenerations(label: String,
+      mk: (Int, String) => org.apache.spark.sql.DataFrame): Unit = {
+    val key = uniq(s"spec-memo-$label")
     var builds = 0
-    def get() = Caching.memoDf(spark, key) {
-      builds += 1
-      Seq(1, 2, 3).toDF("x").groupBy().agg(sum("x").as("s"))
-    }
+    def get() = Caching.memoDf(spark, key) { builds += 1; mk(builds, key) }
     val a = get(); val b = get()
-    assert(a eq b, "same key must return the same Dataset object")
+    assert(a eq b, s"$label: same key must return the same Dataset object")
     assert(builds == 1)
-    a.count()
     assert(a.storageLevel != StorageLevel.NONE)
-    // an external unpersist (what a cache clear does to this entry)
-    // drops the persist; the next ACCESS re-marks it without
-    // rebuilding the plan. Targeted unpersist, not clearCache: suites
-    // share one session and run in parallel.
+    assert(a.select("gen").as[Long].head() == 1L)
+    // what a cache clear does to this entry
     a.unpersist()
     assert(a.storageLevel == StorageLevel.NONE)
     val c = get()
-    assert((c eq a) && builds == 1)
+    assert(!(c eq a) && builds == 2, s"$label: a new generation builds once")
     assert(c.storageLevel != StorageLevel.NONE)
-    assert(c.as[Long].head() == 6L)
+    assert(get() eq c)
+    assert(builds == 2)
+    assert(c.select("gen").as[Long].head() == 2L,
+      s"$label: the new generation's result")
+  }
+
+  test("memoDf returns one analyzed frame per key and re-persists after clearCache") {
+    checkGenerations("plain", (n, k) => Seq((n.toLong, k)).toDF("g", "k")
+      .groupBy("k").agg(sum("g").as("gen")))
+  }
+
+  test("memoDf rebuilds a checkpoint-backed result once per cache generation") {
+    // stands in for a fixpoint whose result lives in checkpoint blocks
+    checkGenerations("checkpoint", (n, k) => Seq((n.toLong, k)).toDF("gen", "k")
+      .localCheckpoint(true))
   }
 
   test("memoDf eager=true materializes once per cache generation") {
@@ -54,23 +68,27 @@ class CachingSpec extends SparkSpec {
     assert(get().storageLevel != StorageLevel.NONE)
   }
 
-  test("memoDfEpoch recomputes after its marker drops but not between accesses") {
-    val key = uniq("spec-epoch")
-    var builds = 0
-    def get() = Caching.memoDfEpoch(spark, key) {
-      builds += 1
-      // stands in for a checkpoint-backed result the CacheManager
-      // cannot guard
-      Seq(builds).toDF("gen").localCheckpoint(true)
+  test("rebuilding an outer memo re-persists the inner memo its build reads") {
+    val inner = uniq("spec-dep-inner"); val outer = uniq("spec-dep-outer")
+    var innerBuilds = 0
+    def in() = Caching.memoDf(spark, inner) {
+      innerBuilds += 1
+      Seq(1, 2, 3).toDF("x").withColumn("k", lit(inner))
     }
-    assert(get().as[Int].head() == 1)
-    assert(get().as[Int].head() == 1, "same generation shares one result")
-    assert(builds == 1)
-    // dropping the marker frame is exactly what a clearCache does to
-    // this entry (targeted here to stay parallel-suite friendly)
-    spark.range(1).select(lit(key).as("memo_epoch_key")).unpersist()
-    assert(get().as[Int].head() == 2, "marker loss starts a new generation")
-    assert(builds == 2)
+    def out() = Caching.memoDf(spark, outer) { in().agg(sum("x").as("s")) }
+    val o1 = out()
+    assert(o1.as[Long].head() == 6L)
+    val i1 = in()
+    assert(innerBuilds == 1)
+    // the generation ends for both (a clearCache drops every entry)
+    o1.unpersist(); i1.unpersist()
+    val o2 = out()
+    assert(o2.storageLevel != StorageLevel.NONE)
+    // looked up by plan, not through the memo (an access would re-pin it)
+    assert(i1.storageLevel != StorageLevel.NONE,
+      "the outer rebuild must re-persist the inner frame it reads")
+    assert(innerBuilds == 2)
+    assert(o2.as[Long].head() == 6L)
   }
 
   test("a memoized build may derive another memoized frame (no recursive-update crash)") {

@@ -187,6 +187,7 @@ class TextIndexSpec extends SparkSpec {
   test("ad-hoc postings over an empty table: a schema-only TxLog table, no rows") {
     import spark.implicits._
     import graft.sources.TxLog
+    import org.apache.spark.sql.types.StringType
     val edir = java.nio.file.Files.createTempDirectory("graft-tie").toString
     Seq.empty[(Long, String)].toDF("id", "text")
       .write.mode("overwrite").parquet(edir)
@@ -197,6 +198,8 @@ class TextIndexSpec extends SparkSpec {
     assert(TxLog.isTable(spark, loc))
     val snap = TxLog.snapshot(spark, loc)
     assert(snap.version == 0L && snap.files.isEmpty)
+    assert(TxLog.read(spark, loc).schema.map(f => f.name -> f.dataType) ==
+      Seq("_docId", "file", "tri", "bucket").map(_ -> StringType))
   }
 
   test("managed postings survive restart; removal is metadata-only; appends after removal persist") {
