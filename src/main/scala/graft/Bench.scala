@@ -243,20 +243,19 @@ object Bench {
       "\"" + n + "\":" +
         passes.map(_(n)._2.mkString("[", ",", "]")).mkString("[", ",", "]")
     }.mkString("{", ",", "}")
-    println(s"""# per-query detail (full, [spark_s, oracle_s]; then [jobs, stages, tasks] per pass): $detail $jobDetail""")
+    // per-query seconds of EVERY pass, not just the min: the cold pass 1
+    // against the best-of-3, and the spread that tells cost from weather
+    // (a flag that appears in one pass under identical code is weather)
+    val passDetail = ordered.collect {
+      case (n, _) if !qErrors.contains(n) =>
+        "\"" + n + "\":[" + passes.map(p => f3(p(n)._1)).mkString(",") + "]"
+    }.mkString("{", ",", "}")
+    println(s"""# per-query detail (full, [spark_s, oracle_s]; then [jobs, stages, tasks] per pass; then seconds per pass): $detail $jobDetail $passDetail""")
     if (qErrors.nonEmpty)
       println(s"""# query ERRORS (excluded from all totals): $errJson""")
     // full per-query pairs as a FILE, out of the driver's 2k-tail budget.
     // Written only by FULL runs: a selective local iteration must not
     // clobber the committed full-suite detail with a 2-query fragment.
-    // `passes` carries the per-query DISPERSION (all pass times, not
-    // just the min) — the r12 verdict's flag-weather ask: a flag that
-    // appears in one pass under identical code is weather, and the
-    // spread is what tells cost from weather without re-deriving it.
-    val passDetail = ordered.collect {
-      case (n, _) if !qErrors.contains(n) =>
-        "\"" + n + "\":[" + passes.map(p => f3(p(n)._1)).mkString(",") + "]"
-    }.mkString("{", ",", "}")
     if (only.isEmpty)
       try java.nio.file.Files.write(
         java.nio.file.Paths.get("bench_detail.json"),

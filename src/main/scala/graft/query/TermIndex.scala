@@ -300,11 +300,14 @@ object TermIndex {
   def attach(spark: SparkSession, key: String,
       docs: => DataFrame): String =
     attached.computeIfAbsent(key, { _ =>
-      // the directory embeds the FULL sanitized key (a hashCode-only
-      // path would silently merge two corpora on a 32-bit collision)
-      val safe = key.replaceAll("[^A-Za-z0-9._-]", "_").take(80)
+      // the directory is a 48-bit digest of the WHOLE key: a truncated
+      // or sanitized key (or a 32-bit hashCode) would give two corpora
+      // one root, merging the second's docs into the first's postings.
+      // 12 hex digits keep the path short enough that a plan's file
+      // location, which Spark cuts at 100 characters, still names the
+      // postings table.
       val root = s"${System.getProperty("java.io.tmpdir")}" +
-        s"/graft-termindex-$processScope/$safe"
+        s"/graft-termindex-$processScope/${TextIndex.md5Hex(key).take(12)}"
       indexDocs(spark, root, docs)
       root
     })

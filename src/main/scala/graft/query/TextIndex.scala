@@ -64,7 +64,7 @@ object TextIndex {
   def activeLocation(path: String, textCol: String): Option[String] =
     Option(cache.get(s"$path:$textCol"))
 
-  private def md5Hex(s: String): String =
+  private[query] def md5Hex(s: String): String =
     java.security.MessageDigest.getInstance("MD5")
       .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
 

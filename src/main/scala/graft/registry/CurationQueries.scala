@@ -129,13 +129,13 @@ object CurationQueries {
       // ESTIMATED BYTES, not rows: 1M bigram STRINGS can be 50-100 MB+
       // (long-token corpora) — past the broadcast/driver-collect
       // comfort zone even when the row count looks small. Per-row
-      // estimate = avg bg length + 8 (the long score) + 40 UnsafeRow
-      // overhead; both stats come off the pinned qtabRaw in one
-      // metadata-cheap agg.
-      val qstats = qtabRaw.agg(count(lit(1)).as("n"),
-        coalesce(avg(length(col("bg"))), lit(0.0)).as("len")).head()
+      // estimate = the bg strings + 8 (the long score) + 40 UnsafeRow
+      // overhead. Both inputs are plan statistics of the pinned
+      // qtabRaw: its materialized cache reports its in-memory bytes
+      // (bg + the long count) and row count, so choosing runs no job.
+      val qstats = qtabRaw.queryExecution.optimizedPlan.stats
       val qtabEstBytes =
-        (qstats.getLong(0) * (qstats.getDouble(1) + 48.0)).toLong
+        qstats.sizeInBytes + qstats.rowCount.getOrElse(BigInt(0)) * 40
       val scoreJoin =
         if (qtabEstBytes <= (64L << 20)) docbg.join(broadcast(qtab), Seq("bg"))
         else docbg.join(qtab.hint("shuffle_hash"), Seq("bg"))

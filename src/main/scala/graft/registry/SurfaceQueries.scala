@@ -130,10 +130,10 @@ object SurfaceQueries {
     //    metadata value") served through the trigram-postings index
     //    instead of a full scan of the long-form KV table. The KV table
     //    is materialized range-clustered on the value (the layout a
-    //    metadata indexer would maintain; Layout.optimizeZOrder's
-    //    1-column case), so the literal's trigrams prune to the files
-    //    whose value range can match — TextIndexSpec asserts the
-    //    pruning; this gate proves row-equivalence to the full scan.
+    //    metadata indexer would maintain), so the literal's trigrams
+    //    prune to the files whose value range can match — TextIndexSpec
+    //    asserts the pruning; this gate proves row-equivalence to the
+    //    full scan.
     //    Identical rows to filtering all values with the wildcard.
     sql("f7_metadata_kv_indexed",
       """WITH kv AS (

@@ -223,31 +223,14 @@ object TxLog {
     * or `None` bounds mean "written before stats" and disable skipping
     * for that file, never wrong results). */
   case class AddFile(path: String, partition: String, rows: Long,
-      minKey: Option[String] = None, maxKey: Option[String] = None,
-      // per-column NUMERIC min/max (footer stats collected for the
-      // z-order dimensions at OPTIMIZE time) — the generic data-skipping
-      // inputs behind [[read]]'s `numRanges`. Files written without
-      // stats for a column are never skipped on it.
-      numStats: Map[String, (Double, Double)] = Map.empty,
-      // table root this file's relative `path` resolves against; None =
-      // the owning table's own root. Set by [[shallowClone]], whose v0
-      // commit BORROWS the source's data files without copying bytes.
-      external: Option[String] = None)
+      minKey: Option[String] = None, maxKey: Option[String] = None)
 
   /** Resolved table state: committed version + live file set + the
     * table schema as of that version (DDL string; carried by commits
     * so an EMPTIED table keeps its shape — absent only on logs written
-    * before schema tracking) + the table's CHECK constraints (name →
-    * boolean SQL expression; every merged batch must satisfy all of
-    * them — see [[addCheckConstraint]]). */
+    * before schema tracking). */
   case class Snapshot(version: Long, files: Seq[AddFile],
-      schemaDdl: Option[String] = None,
-      constraints: Map[String, String] = Map.empty,
-      // COLUMN MAPPING (Delta's rename-without-rewrite): physical
-      // (as-stored-in-parquet) name → current logical name. The stored
-      // schemaDdl stays PHYSICAL; reads rename at the boundary, merges
-      // translate logical batches back. Empty for unmapped tables.
-      colMap: Map[String, String] = Map.empty)
+      schemaDdl: Option[String] = None)
 
   val CheckpointInterval = 10
 
@@ -293,39 +276,18 @@ object TxLog {
         "partition" -> (JString(f.partition): JValue),
         "rows" -> (JLong(f.rows): JValue))
       val stats = f.minKey.map(m => "minKey" -> (JString(m): JValue)).toList ++
-        f.maxKey.map(m => "maxKey" -> (JString(m): JValue)).toList ++
-        (if (f.numStats.isEmpty) Nil
-         else List("nstats" -> (JObject(f.numStats.toList.sortBy(_._1)
-           .map { case (c, (mn, mx)) =>
-             c -> (JArray(List(JDouble(mn), JDouble(mx))): JValue)
-           }): JValue))) ++
-        f.external.map(e => "external" -> (JString(e): JValue)).toList
+        f.maxKey.map(m => "maxKey" -> (JString(m): JValue)).toList
       JObject(base ++ stats: _*)
     }.toList)
 
   private def parseFiles(j: JValue): Seq[AddFile] = j match {
     case JArray(items) => items.collect { case it: JObject =>
       def opt(k: String) = (it \ k).toOption.collect { case JString(s) => s }
-      def num(j: JValue): Option[Double] = j match {
-        case JDouble(d) => Some(d)
-        case JInt(i) => Some(i.toDouble)
-        case JLong(l) => Some(l.toDouble)
-        case JDecimal(d) => Some(d.toDouble)
-        case _ => None
-      }
-      val nstats = (it \ "nstats") match {
-        case JObject(fields) => fields.flatMap {
-          case (c, JArray(List(mn, mx))) =>
-            for (a <- num(mn); b <- num(mx)) yield c -> (a, b)
-          case _ => None
-        }.toMap
-        case _ => Map.empty[String, (Double, Double)]
-      }
       AddFile(
         (it \ "path").values.toString,
         (it \ "partition").values.toString,
         (it \ "rows").values.toString.toLong,
-        opt("minKey"), opt("maxKey"), nstats, opt("external"))
+        opt("minKey"), opt("maxKey"))
     }
     case _ => Seq.empty
   }
@@ -467,159 +429,6 @@ object TxLog {
     read(spark, path, partitions, Some(versionAt(spark, path, tsMillis)),
       keyRange)
 
-  // ---- CHECK constraints --------------------------------------------
-
-  /** Add a CHECK constraint (Delta's `ALTER TABLE ADD CONSTRAINT`
-    * analogue): `exprSql` is a boolean SQL expression over the table's
-    * columns; a row violates it only when it evaluates to FALSE — a
-    * NULL-valued expression SATISFIES the constraint, the SQL-standard
-    * CHECK semantics the reference's stores inherit (a semantics CHANGE
-    * from pre-r13 behavior — see CHANGELOG.md for the upgrade note;
-    * constraints that relied on implicit NOT-NULL strictness must be
-    * rewritten as `c IS NOT NULL AND <pred>`). (This is what
-    * makes narrow upserts on constrained tables possible: a merge
-    * batch omitting a constrained nullable column null-widens and
-    * passes. Authors wanting NOT-NULL strictness write it explicitly:
-    * `c IS NOT NULL AND <pred>`.) The EXISTING table
-    * must already satisfy the constraint (checked distributed, one
-    * scan) and every subsequent [[merge]] batch is validated before
-    * anything stages — a violating batch changes nothing. Published as
-    * a METADATA-ONLY commit; constraints survive checkpoints and are
-    * resolved latest-wins like the schema. Optimistic like every
-    * commit. */
-  def addCheckConstraint(spark: SparkSession, path: String, name: String,
-      exprSql: String, maxAttempts: Int = 20): Unit = {
-    require(name.nonEmpty && !name.contains("\""), s"bad constraint name")
-    var attempt = 0
-    var done = false
-    while (!done) {
-      attempt += 1
-      require(attempt <= maxAttempts,
-        s"addCheckConstraint: $maxAttempts commit conflicts")
-      val snap = snapshot(spark, path)
-      require(snap.version >= 0, s"addCheckConstraint: no table at $path")
-      // validates the expression against the schema AND the rows
-      val current = read(spark, path, asOfVersion = Some(snap.version))
-      val bad = current.filter(expr(exprSql) <=> lit(false)).count()
-      require(bad == 0L,
-        s"constraint '$name' ($exprSql) violated by $bad existing row(s)")
-      done = tryCommit(spark, path, snap.version + 1, Seq.empty, Seq.empty,
-        snap.schemaDdl, Some(snap.constraints + (name -> exprSql)))
-    }
-  }
-
-  /** Drop a CHECK constraint (metadata-only commit; no-op commit is
-    * still published so the history records the change). */
-  def dropCheckConstraint(spark: SparkSession, path: String,
-      name: String, maxAttempts: Int = 20): Unit = {
-    var attempt = 0
-    var done = false
-    while (!done) {
-      attempt += 1
-      require(attempt <= maxAttempts,
-        s"dropCheckConstraint: $maxAttempts commit conflicts")
-      val snap = snapshot(spark, path)
-      require(snap.constraints.contains(name),
-        s"constraint '$name' not found (have: " +
-          s"${snap.constraints.keys.toSeq.sorted.mkString(", ")})")
-      done = tryCommit(spark, path, snap.version + 1, Seq.empty, Seq.empty,
-        snap.schemaDdl, Some(snap.constraints - name))
-    }
-  }
-
-  /** Validate a write batch against the table's CHECK constraints —
-    * ONE distributed pass for ALL constraints (a per-constraint count
-    * would scan the batch k times); throws naming the first violated
-    * constraint (alphabetical) and its violation count before anything
-    * is staged or committed. The batch is first WIDENED to the table's
-    * logical schema with null-filled missing columns: merge accepts
-    * narrow batches (missing columns store as null), so a constraint
-    * on a column the batch omits must evaluate over the null it will
-    * store — and SQL CHECK semantics (violated only when FALSE, NULL
-    * satisfies) means such narrow upserts pass unless the constraint
-    * explicitly demands NOT NULL. A removal-only internal merge
-    * (deleteWhere's empty keys+partition frame) likewise passes
-    * instead of crashing on an unresolvable column name. The presence
-    * filter is case-INsensitive to match `withColumn`'s resolution: a
-    * batch column differing only in case from the committed name must
-    * count as present, not be silently replaced by a null column.
-    * Callers must pass a PINNED batch (the validated rows must be the
-    * rows that stage — see merge/append). */
-  private def validateConstraints(batch: DataFrame, snap: Snapshot): Unit = {
-    if (snap.constraints.isEmpty) return
-    val widened = logicalNames(snap)
-      .filterNot(n => batch.columns.exists(_.equalsIgnoreCase(n)))
-      .foldLeft(batch)((d, c) => d.withColumn(c, lit(null)))
-    val checks = snap.constraints.toSeq.sortBy(_._1)
-    val aggs = checks.map { case (n, e) =>
-      sum(when(expr(e) <=> lit(false), 1L).otherwise(0L)).as(n) }
-    val counts = widened.agg(aggs.head, aggs.tail: _*).collect()(0)
-    checks.zipWithIndex.foreach { case ((name, exprSql), i) =>
-      val bad = if (counts.isNullAt(i)) 0L else counts.getLong(i)
-      if (bad > 0) throw new IllegalArgumentException(
-        s"CHECK constraint '$name' ($exprSql) violated by $bad row(s) " +
-          "in the write batch — nothing was committed")
-    }
-  }
-
-  /** The shared pre-stage column-mapping block of [[merge]] and
-    * [[append]]: stale-writer rejection, mapped-key/partition refusal,
-    * and LOGICAL→physical translation — ONE implementation, so a
-    * mapping fix lands once (the same rationale as BandStore for the
-    * band stores). Runs BEFORE constraint validation so a stale writer
-    * gets the purpose-built rename diagnosis, not a misleading
-    * "constraint violated over the null-widened missing column". */
-  private def mapBatchToPhysical(op: String, batch: DataFrame,
-      snap: Snapshot, keyCol: String, partitionCol: String): DataFrame = {
-    val liveMap = snap.colMap.filter { case (ph, lg) => ph != lg }
-    val stale = batch.columns.toSet.intersect(liveMap.keySet)
-    require(stale.isEmpty,
-      s"$op: column(s) ${stale.toSeq.sorted.mkString(", ")} were " +
-        "renamed — write under the current name(s): " +
-        stale.toSeq.sorted.map(liveMap).mkString(", "))
-    require(!liveMap.exists { case (ph, lg) =>
-        ph == keyCol || lg == keyCol || ph == partitionCol ||
-          lg == partitionCol },
-      s"$op: key/partition column under a rename mapping is not " +
-        "supported — rename it back first")
-    liveMap.foldLeft(batch) { case (d, (ph, lg)) =>
-      if (d.columns.contains(lg)) d.withColumnRenamed(lg, ph) else d
-    }
-  }
-
-  /** LOGICAL→physical translation of one column reference — for the
-    * name-keyed side inputs ([[read]]'s numRanges keys,
-    * [[optimizeZOrder]]'s zCols). */
-  private def toPhysicalName(snap: Snapshot, c: String): String =
-    snap.colMap.collectFirst { case (ph, lg) if lg == c => ph }.getOrElse(c)
-
-  /** Logical column names a CHECK constraint expression references —
-    * the guard input for [[renameColumn]]/[[dropColumn]] (renaming or
-    * dropping a constrained column would leave an expression that can
-    * never resolve again, bricking every later write until the
-    * constraint is dropped; Delta refuses the rename up front, so do
-    * we). ALL nameParts of a reference count, not just the head: a
-    * qualified spelling (`t.payload > 0`) must register `payload`, or
-    * renaming/dropping it would slip past the guard and brick later
-    * writes — over-refusing on a rare nested-field name collision is
-    * the safe direction. Unparseable expressions reference nothing
-    * (they already fail loud at validation time). */
-  private def constraintRefs(exprSql: String): Seq[String] =
-    try org.apache.spark.sql.catalyst.parser.CatalystSqlParser
-      .parseExpression(exprSql).collect {
-        case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute =>
-          a.nameParts
-      }.flatten
-    catch { case scala.util.control.NonFatal(_) => Seq.empty }
-
-  /** Constraints naming `column` among their references (case-
-    * insensitive, Spark's resolution default). */
-  private def constraintsReferencing(
-      constraints: Map[String, String], column: String): Seq[String] =
-    constraints.collect {
-      case (n, sql) if constraintRefs(sql).exists(_.equalsIgnoreCase(column)) => n
-    }.toSeq.sorted
-
   /** [[read]] pinned to a tag (partition/key pruning included). */
   def readTag(spark: SparkSession, path: String, name: String,
       partitions: Option[Set[String]] = None,
@@ -681,15 +490,10 @@ object TxLog {
       .filter(cv => asOf.forall(cv <= _))
     val fromCk = if (ckVersions.isEmpty) -1L else ckVersions.max
     var schema: Option[String] = None
-    var constraints = Map.empty[String, String]
-    var colMap = Map.empty[String, String]
     var files = if (fromCk < 0) Map.empty[String, AddFile]
     else {
       val ck = readJson(fs, checkpointPath(table, fromCk))
       schema = (ck \ "schema").toOption.collect { case JString(d) => d }
-      constraints = parseConstraints(ck \ "constraints")
-        .getOrElse(Map.empty)
-      colMap = parseConstraints(ck \ "colmap").getOrElse(Map.empty)
       parseFiles(ck \ "files").map(f => f.path -> f).toMap
     }
     val commits = commitVersions
@@ -701,9 +505,6 @@ object TxLog {
         case JString(d) => schema = Some(d)
         case _ => ()
       }
-      // absent field = no change; present (possibly empty) = new set
-      parseConstraints(j \ "constraints").foreach(constraints = _)
-      parseConstraints(j \ "colmap").foreach(colMap = _)
       parseFiles(j \ "removes").foreach(f => files -= f.path)
       // removes may also arrive as plain path strings
       (j \ "removes") match {
@@ -716,18 +517,8 @@ object TxLog {
       parseFiles(j \ "adds").foreach(f => files += (f.path -> f))
       v = cv
     }
-    Snapshot(v, files.values.toSeq.sortBy(_.path), schema, constraints,
-      colMap)
+    Snapshot(v, files.values.toSeq.sortBy(_.path), schema)
   }
-
-  /** Parse a commit/checkpoint "constraints" object: None when the
-    * field is absent (no change in this commit), Some(map) otherwise. */
-  private def parseConstraints(j: JValue): Option[Map[String, String]] =
-    j.toOption.collect {
-      case JObject(fields) => fields.collect {
-        case (n, JString(e)) => n -> e
-      }.toMap
-    }
 
   /** Unsigned lexicographic compare of UTF-8 bytes — the order parquet
     * binary statistics are maintained in; key-skipping must compare the
@@ -744,6 +535,17 @@ object TxLog {
     x.length - y.length
   }
 
+  /** Read a set of committed files (paths relative to `table`) under
+    * the committed schema when the log carries one. */
+  private def readAddFiles(spark: SparkSession, table: String,
+      files: Seq[AddFile], schemaDdl: Option[String]): DataFrame = {
+    val rd = spark.read.option("basePath", table)
+    schemaDdl
+      .map(ddl => rd.schema(org.apache.spark.sql.types.StructType.fromDDL(ddl)))
+      .getOrElse(rd)
+      .parquet(files.map(f => s"$table/${f.path}"): _*)
+  }
+
   /** Read the table (optionally pruned to `partitions` and/or a key
     * range) at a consistent snapshot — the committed head, or a pinned
     * past version when `asOfVersion` is set (time travel; see
@@ -754,34 +556,10 @@ object TxLog {
     * Delta's stats-based data skipping. Files written before stats
     * tracking have no bounds and are always read; key-skipping only
     * drops files, so the caller still applies its row filter. */
-  /** Read a set of committed files under one schema, each resolved
-    * against its OWNING root ([[AddFile.external]] for files a
-    * [[shallowClone]] borrowed): parquet's `basePath` must prefix every
-    * file it covers, so the scan runs once per distinct root and the
-    * frames union. */
-  private def readAddFiles(spark: SparkSession, tableRoot: String,
-      files: Seq[AddFile], schemaDdl: Option[String]): DataFrame = {
-    val byRoot = files.groupBy(_.external.getOrElse(tableRoot))
-    byRoot.toSeq.sortBy(_._1).map { case (root, fs) =>
-      val rd = spark.read.option("basePath", root)
-      schemaDdl
-        .map(ddl => rd.schema(
-          org.apache.spark.sql.types.StructType.fromDDL(ddl)))
-        .getOrElse(rd)
-        .parquet(fs.map(f => s"$root/${f.path}"): _*)
-    }.reduce(_ unionByName _)
-  }
-
   def read(spark: SparkSession, path: String,
       partitions: Option[Set[String]] = None,
       asOfVersion: Option[Long] = None,
       keyRange: Option[(String, String)] = None,
-      // per-column CLOSED numeric ranges: a file is skipped when its
-      // committed [[AddFile.numStats]] for that column cannot intersect
-      // the range (files without stats for the column always read —
-      // superset-safe; callers re-apply the predicate). Populated by
-      // [[optimizeZOrder]]'s stat collection.
-      numRanges: Map[String, (Double, Double)] = Map.empty,
       // key-PREFIX data skipping (the multi-point probe complement of
       // `keyRange`): a file is kept iff some prefix's key interval
       // [p, p+"￿") can intersect the file's committed
@@ -807,7 +585,7 @@ object TxLog {
       })
       case None => byPart
     }
-    val byPrefix = keyPrefixes match {
+    val live = keyPrefixes match {
       case Some(ps) =>
         // all keys with prefix p lie in [p, p + '￿'): a file's
         // [mn, mx] overlaps that interval iff p <= mx AND p + '￿'
@@ -844,23 +622,7 @@ object TxLog {
         })
       case None => byKey
     }
-    // numRanges arrive under LOGICAL names (the only names a caller
-    // holds) but file numStats are recorded from the PHYSICAL frame at
-    // staging — translate through the colMap or a post-rename caller's
-    // skipping silently degrades to read-everything (superset-safe but
-    // defeats the z-order clustering it paid for)
-    val physRanges =
-      if (numRanges.isEmpty || snap.colMap.isEmpty) numRanges
-      else numRanges.map { case (c, r) => toPhysicalName(snap, c) -> r }
-    val live = if (physRanges.isEmpty) byPrefix else byPrefix.filter { f =>
-      physRanges.forall { case (c, (lo, hi)) =>
-        f.numStats.get(c) match {
-          case Some((mn, mx)) => mx >= lo && mn <= hi
-          case None => true // no stats → cannot skip
-        }
-      }
-    }
-    val physical = if (live.isEmpty) {
+    if (live.isEmpty) {
       // an emptied (or fully-pruned) table still reads with its full
       // schema: commits carry the table DDL, so projections and
       // filters on the empty frame resolve. Only a log written before
@@ -876,30 +638,6 @@ object TxLog {
       // written before a column was added (schema evolution via merge)
       // null-fill it, and the footer-inference pass is skipped entirely
       readAddFiles(spark, path, live, snap.schemaDdl)
-    }
-    applyColMap(physical, snap.colMap)
-  }
-
-  /** Surface the LOGICAL column names over a physically-named frame —
-    * the read-boundary half of column mapping (a rename is metadata
-    * only: parquet keeps the physical name forever; see
-    * [[renameColumn]]). */
-  private def applyColMap(df: DataFrame,
-      colMap: Map[String, String]): DataFrame = {
-    val live = colMap.toSeq.sortBy(_._1)
-      .filter { case (ph, _) => df.columns.contains(ph) }
-    if (live.isEmpty) df
-    else {
-      // two-phase through unique temp names: a map like {x->y, y->z}
-      // (refused by renameColumn, but defended against here too) would
-      // otherwise have x's rename capture the still-present physical y
-      // mid-fold, silently duplicating and clobbering columns
-      val staged = live.zipWithIndex.map { case ((ph, lg), i) =>
-        (ph, s"__graft_colmap_tmp_${i}__", lg) }
-      val mid = staged.foldLeft(df) { case (d, (ph, t, _)) =>
-        d.withColumnRenamed(ph, t) }
-      staged.foldLeft(mid) { case (d, (_, t, lg)) =>
-        d.withColumnRenamed(t, lg) }
     }
   }
 
@@ -980,7 +718,7 @@ object TxLog {
         Some(readAddFiles(spark, path, fs,
           toS.schemaDdl.orElse(fromS.schemaDdl)))
       }
-    applyColMap((readFiles(removed), readFiles(added)) match {
+    (readFiles(removed), readFiles(added)) match {
       case (None, None) =>
         // no files differ (idle poll, from == to): still honor the
         // documented output schema so a CDC consumer's projections and
@@ -1020,7 +758,7 @@ object TxLog {
               struct(lit("update_postimage").as("ct"), col("a._row").as("r"))))
             .otherwise(array().cast(chType))).as("c"))
           .select(col("c.r.*"), col("c.ct").as("_change_type"))
-    }, toS.colMap)
+    }
   }
 
   private val utf8Ordering: Ordering[String] =
@@ -1102,45 +840,6 @@ object TxLog {
     } finally reader.close()
   }
 
-  /** Per-column NUMERIC min/max from a file's parquet footer: one
-    * map entry per requested column whose statistics exist in EVERY
-    * row group (a column missing stats anywhere yields no entry — no
-    * stats means no skipping, never wrong pruning). */
-  private def footerNumStats(conf: org.apache.hadoop.conf.Configuration,
-      file: Path, cols: Seq[String]): Map[String, (Double, Double)] = {
-    if (cols.isEmpty) return Map.empty
-    import scala.jdk.CollectionConverters._
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file, conf))
-    try {
-      val blocks = reader.getFooter.getBlocks.asScala.toSeq
-      def numeric(v: Any): Option[Double] = v match {
-        case n: java.lang.Integer => Some(n.toDouble)
-        case n: java.lang.Long => Some(n.toDouble)
-        case n: java.lang.Float => Some(n.toDouble)
-        case n: java.lang.Double => Some(n)
-        case _ => None
-      }
-      cols.flatMap { colName =>
-        val perBlock = blocks.flatMap { b =>
-          b.getColumns.asScala.find(_.getPath.toDotString == colName)
-            .flatMap { c =>
-              val st: org.apache.parquet.column.statistics.Statistics[_] =
-                c.getStatistics
-              if (st == null || st.isEmpty || !st.hasNonNullValue) None
-              else for {
-                mn <- numeric(st.genericGetMin)
-                mx <- numeric(st.genericGetMax)
-              } yield (mn, mx)
-            }
-        }
-        if (perBlock.size != blocks.size) None
-        else Some(colName ->
-          (perBlock.map(_._1).min, perBlock.map(_._2).max))
-      }.toMap
-    } finally reader.close()
-  }
-
   /** Write `df`'s rows as new UNCOMMITTED data files under the table
     * root (hive-partitioned by `partitionCol`), returning their AddFile
     * records — row count and, when `statsCol` is set, per-file key
@@ -1148,8 +847,7 @@ object TxLog {
     * read per staged file, proportional to the batch, not the table).
     * Files are invisible to readers until a commit references them. */
   def stageData(spark: SparkSession, path: String, df: DataFrame,
-      partitionCol: String, statsCol: Option[String] = None,
-      numStatsCols: Seq[String] = Nil): Seq[AddFile] = {
+      partitionCol: String, statsCol: Option[String] = None): Seq[AddFile] = {
     val table = new Path(path)
     val fs = fsOf(spark, table)
     val conf = spark.sessionState.newHadoopConf()
@@ -1169,8 +867,7 @@ object TxLog {
           if (!fs.rename(f.getPath, dest))
             throw new java.io.IOException(s"stage move failed: $dest")
           val (rows, mn, mx) = footerStats(conf, dest, statsCol)
-          AddFile(s"$escaped/${dest.getName}", raw, rows, mn, mx,
-            footerNumStats(conf, dest, numStatsCols))
+          AddFile(s"$escaped/${dest.getName}", raw, rows, mn, mx)
         }
     }.toSeq
     fs.delete(stage, true)
@@ -1183,9 +880,7 @@ object TxLog {
     * (best-effort — a checkpoint failure never fails the commit). */
   def tryCommit(spark: SparkSession, path: String, version: Long,
       adds: Seq[AddFile], removes: Seq[AddFile],
-      schemaDdl: Option[String] = None,
-      constraints: Option[Map[String, String]] = None,
-      colMap: Option[Map[String, String]] = None): Boolean = {
+      schemaDdl: Option[String] = None): Boolean = {
     val table = new Path(path)
     val fs = fsOf(spark, table)
     fs.mkdirs(logDir(table))
@@ -1193,13 +888,7 @@ object TxLog {
       "version" -> (JLong(version): JValue),
       "adds" -> renderFiles(adds),
       "removes" -> renderFiles(removes)) ++
-      schemaDdl.map(d => "schema" -> (JString(d): JValue)).toList ++
-      constraints.map(cs => "constraints" -> (JObject(
-        cs.toList.sortBy(_._1).map { case (n, e) =>
-          n -> (JString(e): JValue) }): JValue)).toList ++
-      colMap.map(m => "colmap" -> (JObject(
-        m.toList.sortBy(_._1).map { case (ph, lg) =>
-          ph -> (JString(lg): JValue) }): JValue)).toList
+      schemaDdl.map(d => "schema" -> (JString(d): JValue)).toList
     val body = JsonMethods.compact(JsonMethods.render(JObject(fields: _*)))
     val coordinator = coordinatorOf(path)
     val dest = commitPath(table, version)
@@ -1213,15 +902,7 @@ object TxLog {
             JsonMethods.compact(JsonMethods.render(JObject(
               (List("files" -> renderFiles(snap.files)) ++
                 snap.schemaDdl.map(d =>
-                  "schema" -> (JString(d): JValue)).toList ++
-                (if (snap.constraints.isEmpty) Nil
-                 else List("constraints" -> (JObject(
-                   snap.constraints.toList.sortBy(_._1).map { case (n, e) =>
-                     n -> (JString(e): JValue) }): JValue))) ++
-                (if (snap.colMap.isEmpty) Nil
-                 else List("colmap" -> (JObject(
-                   snap.colMap.toList.sortBy(_._1).map { case (ph, lg) =>
-                     ph -> (JString(lg): JValue) }): JValue)))): _*))))
+                  "schema" -> (JString(d): JValue)).toList): _*))))
       } catch { case _: Exception => () }
     }
     ok
@@ -1347,21 +1028,8 @@ object TxLog {
         "their partition as the prefix before the first '#', so rows in " +
         "this partition could never be deleted (KEY SHAPE CONTRACT)"))
     // micro-batch inputs are re-read on every retry; pin them once
-    val upLogical = updates.localCheckpoint()
+    val up = updates.localCheckpoint()
     val rm = Option(removedKeys).map(_.select(keyCol).localCheckpoint())
-    // CHECK constraints: validate the pinned batch ONCE, before anything
-    // stages — a violating batch leaves the table untouched. (Read off
-    // the current snapshot; a constraint added concurrently governs
-    // commits AFTER its own, same as Delta.) Constraints are written
-    // against LOGICAL names, so they validate before the mapping.
-    val snap0 = snapshot(spark, path)
-    // COLUMN MAPPING first (shared block — stale-writer/mapped-key
-    // guards + LOGICAL→physical translation), THEN constraint
-    // validation over the pinned LOGICAL batch: a stale writer must
-    // get the rename diagnosis, not a null-widened constraint error.
-    val up = mapBatchToPhysical("merge", upLogical, snap0, keyCol,
-      partitionCol)
-    validateConstraints(upLogical, snap0)
     // file-level victim probe (see the class doc's WRITE AMPLIFICATION
     // note): the batch's distinct keys, sorted, when protocol-sized.
     // Collected ONCE off the pinned inputs — retries re-derive victims
@@ -1521,20 +1189,6 @@ object TxLog {
     }
   }
 
-  /** Roll the table BACK to `version` as a NEW commit (the Delta
-    * RESTORE analogue): the head becomes row-identical to the target
-    * snapshot by re-referencing its files — metadata only, nothing
-    * copied or rewritten, and the rolled-back versions stay in the
-    * history (a restore of a restore works; [[changes]] across the
-    * restore commit shows the rollback as ordinary row changes). The
-    * WHOLE table state restores — CHECK constraints and the column
-    * mapping revert with the data, so `read()` after the restore is
-    * indistinguishable from `read(asOfVersion = target)` (Delta's
-    * RESTORE contract; data-only restore would leave rows violating a
-    * later-added constraint, or surface post-rename names over
-    * pre-rename data). The
-    * target must still be readable: at-or-above the vacuum horizon, or
-    * pinned by a [[tag]]. Optimistic like every commit. */
   /** INSERT-only commit (Delta's blind APPEND): stage `df`'s rows as
     * new files and commit them as pure adds — no read-modify-write, so
     * the write cost is Θ(batch) REGARDLESS of table size, where [[merge]]
@@ -1551,27 +1205,11 @@ object TxLog {
     *
     * Schema: the table's committed DDL is preserved; a batch whose
     * column-name set differs from it fails loud (append never widens —
-    * use merge for schema evolution). Batches arrive under LOGICAL
-    * names and validate against CHECK constraints, exactly like
-    * [[merge]] — the insert-only path carries the table's full write
-    * contract. */
+    * use merge for schema evolution), and same-named columns keep
+    * their committed types, exactly like [[merge]]. */
   def append(spark: SparkSession, path: String, df: DataFrame,
       keyCol: String = "_docId", partitionCol: String = "str_databaseid",
       maxAttempts: Int = 20): Unit = {
-    val snap0 = snapshot(spark, path)
-    // CHECK constraints govern EVERY write path, not just merge — an
-    // append slipping a violating row past a constraint would make the
-    // insert-only path the one hole in the table's invariants. The
-    // batch is PINNED first when (and only when) constraints exist:
-    // the validated rows must be the rows that stage, or a
-    // non-deterministic batch could pass validation and stage
-    // different, violating rows — while the unconstrained hot path
-    // (the band stores' per-trigger appends) skips the checkpoint
-    // materialization entirely. Mapping guards run BEFORE validation
-    // (shared block, same diagnosis-order rationale as merge).
-    val pinned = if (snap0.constraints.isEmpty) df else df.localCheckpoint()
-    val phys = mapBatchToPhysical("append", pinned, snap0, keyCol,
-      partitionCol)
     // the batch is validated against a snapshot's committed DDL: names
     // must match exactly (append never widens) AND same-named columns
     // must keep their committed types (same silent-retyping hazard
@@ -1582,23 +1220,17 @@ object TxLog {
         case Some(d) =>
           val committed = org.apache.spark.sql.types.StructType.fromDDL(d)
             .fieldNames.toSet
-          require(committed == phys.columns.toSet,
-            s"append: batch columns ${phys.columns.sorted.mkString(",")} != " +
+          require(committed == df.columns.toSet,
+            s"append: batch columns ${df.columns.sorted.mkString(",")} != " +
               s"table columns ${committed.toSeq.sorted.mkString(",")}")
-          checkTypeStability("append", d, phys.schema)
+          checkTypeStability("append", d, df.schema)
           Some(d)
         case None => Some(org.apache.spark.sql.types.StructType(
-          phys.schema.filter(_.name != partitionCol) ++
-            phys.schema.find(_.name == partitionCol)).toDDL)
+          df.schema.filter(_.name != partitionCol) ++
+            df.schema.find(_.name == partitionCol)).toDDL)
       }
-    // column-set validation BEFORE constraint validation: append never
-    // widens, so a narrow batch (user error) must get the purpose-built
-    // "batch columns != table columns" diagnosis, not a constraint
-    // failure over a null-widened column it never carried — the same
-    // diagnosis-ordering rule the mapping guards follow.
-    validate(snap0.schemaDdl)
-    validateConstraints(pinned, snap0)
-    val clustered = phys
+    validate(snapshot(spark, path).schemaDdl)
+    val clustered = df
       .repartitionByRange(col(partitionCol), col(keyCol))
       .sortWithinPartitions(col(partitionCol), col(keyCol))
     val staged = stageData(spark, path, clustered, partitionCol, Some(keyCol))
@@ -1671,108 +1303,6 @@ object TxLog {
     -1L // unreachable
   }
 
-  /** The table's LOGICAL schema field names (physical DDL + mapping) —
-    * what [[read]] surfaces. */
-  private def logicalNames(snap: Snapshot): Seq[String] =
-    snap.schemaDdl.map(ddl =>
-      org.apache.spark.sql.types.StructType.fromDDL(ddl).fieldNames.toSeq
-        .map(n => snap.colMap.getOrElse(n, n))).getOrElse(Seq.empty)
-
-  /** RENAME COLUMN without rewriting a byte (Delta's column-mapping
-    * rename): a metadata-only commit extends the physical→logical map —
-    * parquet files keep the original (physical) name forever, [[read]]/
-    * [[changes]] surface the logical name, and [[merge]] translates
-    * logical batches back to physical before staging (a batch still
-    * written under the old name is refused as a stale writer). Chained
-    * renames collapse to one mapping; renaming back to the physical
-    * name drops it. Time travel below the rename commit shows the old
-    * name — the mapping is versioned state like the schema.
-    * Restriction: the table's key and partition columns must not be
-    * renamed (every merge contract speaks those names; merge refuses a
-    * mapped key/partition loudly). */
-  def renameColumn(spark: SparkSession, path: String, from: String,
-      to: String, maxAttempts: Int = 20): Unit = {
-    require(from != to, "renameColumn: from == to")
-    require(to.nonEmpty && !to.contains("#") && !to.contains("`"),
-      s"renameColumn: invalid target name '$to'")
-    var attempt = 0
-    var done = false
-    while (!done) {
-      attempt += 1
-      require(attempt <= maxAttempts,
-        s"renameColumn: $maxAttempts commit conflicts")
-      val snap = snapshot(spark, path)
-      require(snap.version >= 0, s"renameColumn: no table at $path")
-      require(snap.schemaDdl.isDefined,
-        "renameColumn: table predates schema tracking")
-      val logical = logicalNames(snap)
-      require(logical.contains(from),
-        s"renameColumn: no column '$from' (have: ${logical.mkString(", ")})")
-      require(!logical.contains(to),
-        s"renameColumn: column '$to' already exists")
-      val constrained = constraintsReferencing(snap.constraints, from)
-      require(constrained.isEmpty,
-        s"renameColumn: column '$from' is referenced by CHECK " +
-          s"constraint(s) ${constrained.mkString(", ")} — drop them " +
-          "first (a rename would leave expressions that never resolve " +
-          "again, failing every later write)")
-      // physical name of `from`: the key mapping to it, or itself
-      val physical = snap.colMap.collectFirst {
-        case (ph, lg) if lg == from => ph }.getOrElse(from)
-      // the target must also avoid every OTHER column's PHYSICAL name:
-      // committing {x->y} while physical y exists (mapped elsewhere)
-      // would let merge's stale-writer guard misfire and would make the
-      // read-side map collision-prone ({x->y, y->z} renames y twice)
-      val physicalFields = snap.schemaDdl.map(ddl =>
-        org.apache.spark.sql.types.StructType.fromDDL(ddl)
-          .fieldNames.toSeq).getOrElse(Seq.empty)
-      require(to == physical || !physicalFields.contains(to),
-        s"renameColumn: '$to' is the physical name of an existing " +
-        "column; pick a name not present in the stored schema")
-      val newMap0 = snap.colMap.filter { case (_, lg) => lg != from }
-      val newMap = if (to == physical) newMap0
-                   else newMap0 + (physical -> to)
-      done = tryCommit(spark, path, snap.version + 1, Seq.empty, Seq.empty,
-        snap.schemaDdl, Some(snap.constraints), Some(newMap))
-    }
-  }
-
-  /** DROP COLUMN without rewriting a byte: the physical field leaves
-    * the committed DDL (and its mapping, if any), so reads stop
-    * projecting it — the bytes stay in the old files until natural
-    * rewrites (compaction/merge) age them out, exactly Delta's
-    * column-mapping drop. Key/partition columns refuse. */
-  def dropColumn(spark: SparkSession, path: String, name: String,
-      maxAttempts: Int = 20): Unit = {
-    var attempt = 0
-    var done = false
-    while (!done) {
-      attempt += 1
-      require(attempt <= maxAttempts,
-        s"dropColumn: $maxAttempts commit conflicts")
-      val snap = snapshot(spark, path)
-      require(snap.version >= 0, s"dropColumn: no table at $path")
-      require(snap.schemaDdl.isDefined,
-        "dropColumn: table predates schema tracking")
-      val logical = logicalNames(snap)
-      require(logical.contains(name),
-        s"dropColumn: no column '$name' (have: ${logical.mkString(", ")})")
-      val constrained = constraintsReferencing(snap.constraints, name)
-      require(constrained.isEmpty,
-        s"dropColumn: column '$name' is referenced by CHECK " +
-          s"constraint(s) ${constrained.mkString(", ")} — drop them first")
-      val physical = snap.colMap.collectFirst {
-        case (ph, lg) if lg == name => ph }.getOrElse(name)
-      val struct0 = org.apache.spark.sql.types.StructType.fromDDL(
-        snap.schemaDdl.get)
-      val newDdl = org.apache.spark.sql.types.StructType(
-        struct0.filterNot(_.name == physical)).toDDL
-      done = tryCommit(spark, path, snap.version + 1, Seq.empty, Seq.empty,
-        Some(newDdl), Some(snap.constraints),
-        Some(snap.colMap - physical))
-    }
-  }
-
   /** Row-level `UPDATE WHERE` (Delta's predicate update): rows matching
     * `condition` get the `set` expressions applied (each evaluated over
     * the OLD row, like SQL UPDATE ... SET) and merge back through the
@@ -1827,6 +1357,16 @@ object TxLog {
     -1L // unreachable
   }
 
+  /** Roll the table BACK to `version` as a NEW commit (the Delta
+    * RESTORE analogue): the head becomes row-identical to the target
+    * snapshot by re-referencing its files — metadata only, nothing
+    * copied or rewritten, and the rolled-back versions stay in the
+    * history (a restore of a restore works; [[changes]] across the
+    * restore commit shows the rollback as ordinary row changes). The
+    * target's schema restores with its files, so `read()` after the
+    * restore is indistinguishable from `read(asOfVersion = target)`.
+    * The target must still be readable: at-or-above the vacuum
+    * horizon, or pinned by a [[tag]]. Optimistic like every commit. */
   def restore(spark: SparkSession, path: String, version: Long,
       maxAttempts: Int = 20): Unit = {
     var attempt = 0
@@ -1841,17 +1381,8 @@ object TxLog {
       val headPaths = head.files.map(_.path).toSet
       val adds = target.files.filterNot(f => headPaths(f.path))
       val removes = head.files.filterNot(f => targetPaths(f.path))
-      // restore the WHOLE table state, metadata included: constraints
-      // and the column mapping revert WITH the data (explicit — an
-      // absent field would inherit the head's). Restoring data only
-      // would leave observable inconsistency: read() after a restore
-      // across a rename would surface different column names than
-      // read(asOfVersion = target), and rows predating a
-      // later-added CHECK constraint would sit in violation of a
-      // constraint the restore kept live.
       done = tryCommit(spark, path, head.version + 1, adds, removes,
-        target.schemaDdl.orElse(head.schemaDdl),
-        Some(target.constraints), Some(target.colMap))
+        target.schemaDdl.orElse(head.schemaDdl))
     }
   }
 
@@ -1987,101 +1518,6 @@ object TxLog {
       // conflict: a writer landed first — its commit may have replaced
       // some of our inputs; restart from the fresh snapshot (our staged
       // files stay unreferenced and are reclaimed by vacuum)
-    }
-    0
-  }
-
-  /** SHALLOW CLONE (the Delta `CREATE TABLE ... SHALLOW CLONE src`
-    * analogue): create a NEW independent table at `destPath` whose v0
-    * commit BORROWS the source's current data files by reference — a
-    * metadata-only operation, no bytes copied, O(files) driver work.
-    * The clone starts with the source's schema and CHECK constraints
-    * and then evolves independently: merges/compactions/OPTIMIZE at
-    * the clone write their own local files and never touch the source;
-    * a full local rewrite (e.g. [[optimizeZOrder]] or a compaction that
-    * folds every borrowed file) materializes it completely. This is the
-    * zero-copy dev/experimentation copy a 100 TB table needs.
-    *
-    * Caveat shared with the Delta feature: [[vacuum]] runs per table
-    * root and only deletes files IT owns, so vacuuming the clone can
-    * never delete source bytes — but vacuuming the SOURCE can remove
-    * files the clone still references (the source does not know about
-    * borrowers). Pin a [[tag]] on the source version you cloned, or
-    * schedule source vacuums around clone lifetimes. */
-  def shallowClone(spark: SparkSession, srcPath: String,
-      destPath: String): Long = {
-    val src = new Path(srcPath)
-    val fs = fsOf(spark, src)
-    require(isTable(spark, srcPath), s"shallowClone: no table at $srcPath")
-    require(!isTable(spark, destPath),
-      s"shallowClone: $destPath is already a table")
-    val qualifiedSrc = fs.makeQualified(src).toString
-    val snap = snapshot(spark, srcPath)
-    val borrowed = snap.files.map(f =>
-      f.copy(external = Some(f.external.getOrElse(qualifiedSrc))))
-    fsOf(spark, new Path(destPath)).mkdirs(new Path(destPath))
-    require(tryCommit(spark, destPath, 0L, borrowed, Seq.empty,
-      snap.schemaDdl,
-      if (snap.constraints.isEmpty) None else Some(snap.constraints),
-      if (snap.colMap.isEmpty) None else Some(snap.colMap)),
-      s"shallowClone: concurrent writer created $destPath first")
-    snap.version
-  }
-
-  /** Transactional OPTIMIZE ZORDER (the Delta `OPTIMIZE ... ZORDER BY`
-    * analogue): rewrite the table clustered along the z-curve over
-    * `zCols` — quantile-binned, bit-interleaved, range-partitioned on
-    * (partition, z) with one slot per `targetRowsPerFile` rows, each
-    * slot z-sorted — and commit the swap optimistically (a concurrent
-    * writer is a version race the loser retries, same contract as
-    * [[compact]]). Every output file covers a small TILE of the zCols'
-    * value domain, and its per-column min/max footer stats are
-    * collected into the commit ([[AddFile.numStats]]), so a
-    * [[read]] with `numRanges` on ANY z column — or a pushed-down
-    * range filter through `format("txlog")` — opens a fraction of the
-    * files instead of all of them. A linear key sort serves only its
-    * leading column; this is the multi-dimension data-skipping layout
-    * a 100 TB table queried on several axes needs.
-    *
-    * Row-identical by construction; superseded files remain readable
-    * for time travel until [[vacuum]]. Returns the number of files the
-    * clustered table now has. */
-  def optimizeZOrder(spark: SparkSession, path: String, zCols: Seq[String],
-      partitionCol: String = "str_databaseid", keyCol: String = "_docId",
-      bits: Int = 8, maxAttempts: Int = 20,
-      targetRowsPerFile: Long = 4L * 1024 * 1024): Int = {
-    require(zCols.nonEmpty, "optimizeZOrder needs at least one column")
-    var attempt = 0
-    while (true) {
-      attempt += 1
-      require(attempt <= maxAttempts,
-        s"optimizeZOrder: $maxAttempts commit conflicts")
-      val snap = snapshot(spark, path)
-      if (snap.files.isEmpty) return 0
-      val inputs = snap.files
-      val totalRows = inputs.map(f => math.max(f.rows, 0L)).sum
-      val slots = math.max(1,
-        math.ceil(totalRows.toDouble / targetRowsPerFile).toInt)
-      // zCols arrive under LOGICAL names (like every public op) but the
-      // rewrite frame and the staged numStats are PHYSICAL — translate,
-      // so z-ordering a renamed column works and its stats line up with
-      // read's (equally translated) numRanges keys
-      val zPhysical = zCols.map(c => toPhysicalName(snap, c))
-      val raw = readAddFiles(spark, path, inputs, snap.schemaDdl)
-        .withColumn(partitionCol, col(partitionCol).cast("string"))
-      zPhysical.foreach(c => require(raw.columns.contains(c),
-        s"optimizeZOrder: no column $c in table at $path"))
-      val clustered = raw
-        .withColumn("_z", graft.core.Layout.zColumn(raw, zPhysical, bits))
-        .repartitionByRange(slots, col(partitionCol), col("_z"))
-        .sortWithinPartitions(col(partitionCol), col("_z"))
-        .drop("_z")
-      val staged = stageData(spark, path, clustered, partitionCol,
-        Some(keyCol).filter(clustered.columns.contains), zPhysical)
-      if (tryCommit(spark, path, snap.version + 1, staged, inputs))
-        return staged.size
-      // conflict: restart from the fresh snapshot; our staged files
-      // stay unreferenced and are reclaimed by vacuum
     }
     0
   }

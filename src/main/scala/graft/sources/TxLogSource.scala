@@ -15,6 +15,7 @@ import org.apache.spark.sql.types.StructType
   *   spark.read.format("txlog").load(path)                   // head
   *   spark.read.format("txlog").option("asOfVersion", 3)...  // time travel
   *   spark.read.format("txlog").option("tag", "train-v1")... // pinned tag
+  *   spark.read.format("txlog").option("timestampAsOf", ms)... // as of time
   *   df.write.format("txlog").mode("append").save(path)      // MERGE upsert
   *   df.write.format("txlog").mode("overwrite").save(path)   // tx replace
   * }}}
@@ -24,9 +25,10 @@ import org.apache.spark.sql.types.StructType
   * column become the footer-stats `keyRange` (files whose min/max
   * bounds exclude the range are never opened), and equality/IN filters
   * on the partition column prune partitions before any file is listed.
-  * Both prunings are SUPERSETS of the exact predicate, and the relation
-  * reports every filter as unhandled, so Spark re-applies the row-level
-  * predicate on top — pushdown can only skip I/O, never change results.
+  * Filters on any other column skip no files. Both prunings are
+  * SUPERSETS of the exact predicate, and the relation reports every
+  * filter as unhandled, so Spark re-applies the row-level predicate on
+  * top — pushdown can only skip I/O, never change results.
   *
   * Writes map `append` to [[TxLog.merge]] (last-writer-wins upsert, one
   * atomic commit) and `overwrite` to a transactional full replace (the
@@ -262,10 +264,9 @@ final case class TxLogRelation(
   }
 
   private def load(partitions: Option[Set[String]],
-      keyRange: Option[(String, String)],
-      numRanges: Map[String, (Double, Double)] = Map.empty): DataFrame =
+      keyRange: Option[(String, String)]): DataFrame =
     TxLog.read(sqlContext.sparkSession, path, partitions, resolvedVersion,
-      keyRange, numRanges)
+      keyRange)
 
   override def schema: StructType = load(None, None).schema
 
@@ -296,41 +297,6 @@ final case class TxLogRelation(
     }
   }
 
-  /** Closed numeric ranges implied by the pushed filters on any
-    * NON-key, non-partition column — matched against the per-column
-    * stats an `OPTIMIZE ZORDER` commit recorded ([[TxLog.AddFile
-    * .numStats]]; files without stats for a column always read).
-    * Superset-safe like the key range: every filter is re-applied by
-    * Spark above the scan. */
-  private[sources] def numRangesOf(
-      filters: Array[Filter]): Map[String, (Double, Double)] = {
-    val ranges = scala.collection.mutable.Map
-      .empty[String, (Double, Double)]
-    def tighten(c: String, lo: Double, hi: Double): Unit = {
-      val (l0, h0) = ranges.getOrElse(c,
-        (Double.NegativeInfinity, Double.PositiveInfinity))
-      ranges(c) = (math.max(l0, lo), math.min(h0, hi))
-    }
-    def num(v: Any): Option[Double] = v match {
-      case n: Number => Some(n.doubleValue())
-      case _ => None
-    }
-    filters.foreach {
-      case EqualTo(c, v) if c != keyColumn && c != partitionColumn =>
-        num(v).foreach(d => tighten(c, d, d))
-      case GreaterThanOrEqual(c, v) if c != keyColumn =>
-        num(v).foreach(d => tighten(c, d, Double.PositiveInfinity))
-      case GreaterThan(c, v) if c != keyColumn =>
-        num(v).foreach(d => tighten(c, d, Double.PositiveInfinity))
-      case LessThanOrEqual(c, v) if c != keyColumn =>
-        num(v).foreach(d => tighten(c, Double.NegativeInfinity, d))
-      case LessThan(c, v) if c != keyColumn =>
-        num(v).foreach(d => tighten(c, Double.NegativeInfinity, d))
-      case _ => ()
-    }
-    ranges.toMap
-  }
-
   /** Partition set implied by equality/IN filters on `partitionColumn`. */
   private[sources] def partitionsOf(
       filters: Array[Filter]): Option[Set[String]] = {
@@ -350,8 +316,7 @@ final case class TxLogRelation(
 
   override def buildScan(requiredColumns: Array[String],
       filters: Array[Filter]): RDD[Row] = {
-    val base = load(partitionsOf(filters), keyRangeOf(filters),
-      numRangesOf(filters))
+    val base = load(partitionsOf(filters), keyRangeOf(filters))
     val projected =
       if (requiredColumns.isEmpty) base.select()
       else base.select(requiredColumns.map(col).toSeq: _*)

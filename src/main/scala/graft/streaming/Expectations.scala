@@ -4,16 +4,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Data-quality EXPECTATIONS over a maintained table's ingest path —
-  * the "expect or quarantine" contract (the managed-pipeline analogue
-  * of CHECK constraints: a constraint fails the whole batch loudly,
-  * an expectation ROUTES the violating rows aside and lets the clean
-  * majority commit; reference behavior this generalizes: the sidecar
-  * ingestion path quarantines malformed rows instead of aborting,
-  * `workflow/Workflows.quarantineSidecars`).
+  * the "expect or quarantine" contract: instead of failing the whole
+  * batch, an expectation ROUTES the violating rows aside and lets the
+  * clean majority commit (reference behavior this generalizes: the
+  * sidecar ingestion path quarantines malformed rows instead of
+  * aborting, `workflow/Workflows.quarantineSidecars`).
   *
   * Each rule is (name → boolean SQL over the batch's columns); a row
   * passes only when EVERY rule evaluates TRUE (NULL = violation,
-  * fail-closed like CHECK constraints). Violating rows land in a
+  * fail-closed). Violating rows land in a
   * quarantine [[graft.sources.TxLog]] table with the violated rule
   * names and the batch id — atomic per batch, snapshot-isolated,
   * replayable — so an operator can inspect, fix, and re-merge them.

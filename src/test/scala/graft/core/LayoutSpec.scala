@@ -47,55 +47,6 @@ class LayoutSpec extends SparkSpec {
     assert(plan.contains("_salt"), plan.take(1500))
   }
 
-  test("zValue interleaves bin bits (x odd positions, y even)") {
-    // x=0b011 → bits at positions 1,3 → 0b01010; y=0b101 → positions
-    // 0,4 → 0b10001; z = 0b11011 = 27
-    val z = Seq((3L, 5L)).toDF("bx", "by")
-      .select(Layout.zValue(Seq(col("bx"), col("by")), 3).as("z"))
-      .head.getLong(0)
-    assert(z === 27L)
-  }
-
-  test("z-order keeps BOTH columns' per-file stats tight; linear sort only the first") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-zorder").toString
-    val n = 20000L
-    // two independent pseudo-uniform columns
-    val df = spark.range(n).select(
-      (col("id") * 2654435761L % 997).as("x"),
-      (col("id") * 40503L % 991).as("y"))
-    val files = 16
-    Layout.writeZOrdered(df, s"$dir/z", Seq("x", "y"), files)
-    df.repartitionByRange(files, col("x")).sortWithinPartitions("x")
-      .write.parquet(s"$dir/lin")
-    // the skipping power a stats-driven reader gets: how many files'
-    // [min, max] must be opened for a point predicate on the column
-    def avgOverlap(path: String, c: String): Double = {
-      val parts = new java.io.File(path).listFiles
-        .filter(_.getName.endsWith(".parquet"))
-      assert(parts.length === files)
-      val ranges = parts.map { f =>
-        val r = spark.read.parquet(f.toString).agg(min(c), max(c)).head
-        (r.getLong(0), r.getLong(1))
-      }
-      val probes = (0 until 50).map(i => i * 991L / 50)
-      probes.map(p => ranges.count { case (lo, hi) => lo <= p && p <= hi })
-        .sum.toDouble / probes.size
-    }
-    val (zx, zy) = (avgOverlap(s"$dir/z", "x"), avgOverlap(s"$dir/z", "y"))
-    val (lx, ly) = (avgOverlap(s"$dir/lin", "x"), avgOverlap(s"$dir/lin", "y"))
-    // linear layout: x prunes perfectly, y stats are useless (every file
-    // spans the whole y domain)
-    assert(lx <= 2.0, s"linear x overlap $lx")
-    assert(ly >= files * 0.8, s"linear y overlap $ly")
-    // z-order: BOTH columns prune to a fraction of the file count
-    assert(math.max(zx, zy) <= files / 2.0, s"z overlaps x=$zx y=$zy")
-    assert(zy <= ly / 2.0, s"z y overlap $zy vs linear $ly")
-    // row multiset preserved
-    assert(spark.read.parquet(s"$dir/z").count() === n)
-    assert(spark.read.parquet(s"$dir/z")
-      .except(df).isEmpty && df.except(spark.read.parquet(s"$dir/z")).isEmpty)
-  }
-
   test("page tokens round-trip arbitrary keys") {
     val keys = Seq("a1", "db:asset:path/with/slashes", "ключ-😀", "")
     keys.foreach { k =>

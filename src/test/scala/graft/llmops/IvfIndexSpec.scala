@@ -33,6 +33,12 @@ class IvfIndexSpec extends SparkSpec {
   private def fresh(pfx: String): String =
     java.nio.file.Files.createTempDirectory(pfx).toString + "/ivf"
 
+  /** Give `twin` the same frozen centroid table as `root`. */
+  private def copyCentroids(root: String, twin: String): Unit =
+    TxLog.merge(spark, s"$twin/centroids",
+      TxLog.read(spark, s"$root/centroids"),
+      keyCol = "_docId", partitionCol = "_shard")
+
   private def hits(df: DataFrame): Set[(Long, Int, Long)] =
     df.select("q_id", "rank", "cand_id").as[(Long, Int, Long)]
       .collect().toSet
@@ -48,7 +54,7 @@ class IvfIndexSpec extends SparkSpec {
       i % 3 == 0 && i % 2 == 1)))
     // one-shot twin: same frozen centroid table, whole corpus at once
     val twin = fresh("graft-ivf1t")
-    TxLog.shallowClone(spark, s"$root/centroids", s"$twin/centroids")
+    copyCentroids(root, twin)
     IvfIndex.addVectors(spark, twin, vecs(corpus))
     val q = vecs(0L until 6L)
     val a = hits(IvfIndex.search(spark, root, q, k = 5))
@@ -110,7 +116,7 @@ class IvfIndexSpec extends SparkSpec {
       s"deleted vectors still indexed: $got")
     // the fresh twin over the table's current rows agrees exactly
     val twin = fresh("graft-ivf4w")
-    TxLog.shallowClone(spark, s"$root/centroids", s"$twin/centroids")
+    copyCentroids(root, twin)
     IvfIndex.addVectors(spark, twin,
       TxLog.read(spark, tbl).select("vec_id", "embedding"))
     assert(hits(IvfIndex.search(spark, twin, vecs(Seq(0L)), k = 50)) == got)

@@ -207,6 +207,26 @@ class TermIndexSpec extends SparkSpec {
       "optimize changed ranking results")
   }
 
+  test("attach gives corpora whose keys share an 80-character prefix their own roots") {
+    // two keys equal in their first 80 characters (e.g. two long data-dir
+    // paths) and in every character that sanitizes to '_'
+    val prefix = "spec:attach:" + "x" * 80
+    val keyA = prefix + "/a"
+    val keyB = prefix + "/b"
+    val docsA = docsOf(corpus(30))
+    val docsB = docsOf(corpus(30, offset = 5000))
+    val rootA = TermIndex.attach(spark, keyA, docsA)
+    val rootB = TermIndex.attach(spark, keyB, docsB)
+    assert(rootA != rootB)
+    val terms = Seq("alpha", "beta")
+    val idsA = ranked(TermIndex.rank(spark, rootA, terms, 100)).map(_._1)
+    val idsB = ranked(TermIndex.rank(spark, rootB, terms, 100)).map(_._1)
+    assert(idsA.nonEmpty && idsA.forall(_ <= 30L), s"corpus A ranked $idsA")
+    assert(idsB.nonEmpty && idsB.forall(_ > 5000L), s"corpus B ranked $idsB")
+    assert(ranked(TermIndex.rank(spark, rootA, terms, 100)) ==
+      ranked(Bm25.rank(docsA, "doc_id", "tk", terms, 100)))
+  }
+
   test("hash60Value is bit-identical to the hash60 column") {
     val samples = Seq("alpha", "beta", "dup", "merge", "scan", "w131",
       "Ünïcode-émoji", "", "a b", "0", "zzz")

@@ -12,9 +12,8 @@ import graft.SparkSpec
   * committing a stale DDL a concurrent merge widened, maintenance
   * rewriting files a reader is pruning over. This spec drives random
   * SEQUENCES of merge / append / deleteWhere / updateWhere / restore /
-  * compact / z-order / RENAME / vacuum against an in-memory reference
-  * model and, after
-  * every step, requires the full table read to equal the model exactly
+  * compact / vacuum / tag / deletePartitions against an in-memory
+  * reference model and, after every step, requires the full table read to equal the model exactly
   * (no duplicate keys, no stale rows, no lost rows). At the end of each
   * round it replays the whole history through the three derived
   * surfaces that must agree with the log:
@@ -30,12 +29,8 @@ import graft.SparkSpec
   *     partition histogram without reading any data file.
   * Keys are drawn from a SMALL pool so merges genuinely collide with
   * earlier generations, and ops hit two partitions so partition
-  * derivation from the key prefix stays honest. The payload column's
-  * LOGICAL name flips between `payload` and `payload_v2` mid-sequence
-  * (renameColumn is metadata-only), so every later op — merge, append,
-  * predicate delete/update, z-order, time travel, CDC — must resolve
-  * through the column mapping; the model tracks the name live at each
-  * version and probes under it. Seeded rounds — failures reproduce. */
+  * derivation from the key prefix stays honest. Seeded rounds —
+  * failures reproduce. */
 class TxLogModelFuzzSpec extends SparkSpec {
   import spark.implicits._
 
@@ -53,12 +48,8 @@ class TxLogModelFuzzSpec extends SparkSpec {
       val opsLog = scala.collection.mutable.ArrayBuffer.empty[String]
       var floor = 0L // oldest version time travel may probe after a vacuum
       var appendSeq = 0
-      var payloadName = "payload" // current LOGICAL name (rename flips it)
-      val nameAtVersion = scala.collection.mutable.LinkedHashMap.empty[Long, String]
-      var constraintCol: Option[String] = None // live CHECK constraint's column
-      val constraintAtVersion = scala.collection.mutable.LinkedHashMap.empty[Long, Option[String]]
-      // tag name -> (model, payload name) pinned at tag time
-      val tagModels = scala.collection.mutable.LinkedHashMap.empty[String, (Map[String, Long], String)]
+      // tag name -> model pinned at tag time
+      val tagModels = scala.collection.mutable.LinkedHashMap.empty[String, Map[String, Long]]
 
       def partOf(k: String): String = k.substring(0, k.indexOf('#'))
       def poolKey(): String = s"p${r.next() % 2}#k${"%02d".format(r.next() % 20)}"
@@ -68,7 +59,7 @@ class TxLogModelFuzzSpec extends SparkSpec {
 
       def checkReadEqualsModel(step: Int): Unit = {
         val got = TxLog.read(spark, dir)
-          .select(col("_docId"), col("str_databaseid"), col(payloadName))
+          .select(col("_docId"), col("str_databaseid"), col("payload"))
           .as[(String, String, Long)].collect().toSeq
         assert(got.length == got.map(_._1).distinct.length,
           s"round $round step $step: duplicate keys " +
@@ -86,12 +77,10 @@ class TxLogModelFuzzSpec extends SparkSpec {
           .toDF("_docId", "str_databaseid", "payload"))
       model = seed
       versionModels(headVersion()) = model
-      nameAtVersion(headVersion()) = payloadName
-      constraintAtVersion(headVersion()) = constraintCol
       checkReadEqualsModel(0)
 
       (1 to 12).foreach { step =>
-        val opKind = r.next() % 14
+        val opKind = r.next() % 12
         opKind match {
           case 0 | 1 | 2 => // merge: colliding upserts + disjoint removals
             val ups = (1 to (1 + (r.next() % 5)).toInt)
@@ -103,7 +92,7 @@ class TxLogModelFuzzSpec extends SparkSpec {
               else Seq.empty
             TxLog.merge(spark, dir,
               ups.toSeq.map { case (k, v) => (k, partOf(k), v) }
-                .toDF("_docId", "str_databaseid", payloadName),
+                .toDF("_docId", "str_databaseid", "payload"),
               removedKeys =
                 if (rms.isEmpty) null else rms.toDF("_docId"))
             model = (model -- rms) ++ ups
@@ -114,11 +103,11 @@ class TxLogModelFuzzSpec extends SparkSpec {
               (k, partOf(k), r.next() % 1000)
             }
             TxLog.append(spark, dir,
-              rows.toDF("_docId", "str_databaseid", payloadName))
+              rows.toDF("_docId", "str_databaseid", "payload"))
             model = model ++ rows.map(t => t._1 -> t._3)
           case 4 => // deleteWhere on a payload residue
             val c = r.next() % 4
-            val n = TxLog.deleteWhere(spark, dir, col(payloadName) % 4 === c)
+            val n = TxLog.deleteWhere(spark, dir, col("payload") % 4 === c)
             val expected = model.filter(_._2 % 4 == c)
             assert(n == expected.size,
               s"round $round step $step: deleteWhere reported $n, " +
@@ -127,19 +116,15 @@ class TxLogModelFuzzSpec extends SparkSpec {
           case 5 => // updateWhere: SQL UPDATE over the old rows
             val c = r.next() % 3
             val n = TxLog.updateWhere(spark, dir,
-              col(payloadName) % 3 === c,
-              set = Seq(payloadName -> (col(payloadName) * 2 + 1)))
+              col("payload") % 3 === c,
+              set = Seq("payload" -> (col("payload") * 2 + 1)))
             val hit = model.filter(_._2 % 3 == c)
             assert(n == hit.size,
               s"round $round step $step: updateWhere reported $n, " +
                 s"model expected ${hit.size}")
             model = model ++ hit.map { case (k, v) => k -> (v * 2 + 1) }
-          case 6 => // row-invisible maintenance: compact or z-order
-            if (r.next() % 2 == 0)
-              TxLog.compact(spark, dir, targetRowsPerFile = 8L)
-            else
-              TxLog.optimizeZOrder(spark, dir, Seq(payloadName),
-                targetRowsPerFile = 8L)
+          case 6 => // row-invisible maintenance
+            TxLog.compact(spark, dir, targetRowsPerFile = 8L)
           case 7 => // vacuum: physical cleanup; time travel floor moves
             TxLog.vacuum(spark, dir, olderThanMs = 0L)
             floor = headVersion()
@@ -148,30 +133,10 @@ class TxLogModelFuzzSpec extends SparkSpec {
             if (candidates.nonEmpty) {
               val target = candidates((r.next() % candidates.length).toInt)
               TxLog.restore(spark, dir, target)
-              // restore reverts the WHOLE table state: rows, the column
-              // mapping AND the constraint set (read() must equal
-              // read(asOfVersion = target))
+              // read() after the restore must equal read(asOfVersion = target)
               model = versionModels(target)
-              payloadName = nameAtVersion(target)
-              constraintCol = constraintAtVersion(target)
             }
-          case 9 => // rename: metadata-only logical flip; every later
-            // op must speak the new name, every earlier version keeps its.
-            // A column a live CHECK constraint references must REFUSE the
-            // rename (the expression would never resolve again) and leave
-            // the table untouched — the post-step read check proves that.
-            val to = if (payloadName == "payload") "payload_v2" else "payload"
-            if (constraintCol.contains(payloadName)) {
-              val e = intercept[IllegalArgumentException] {
-                TxLog.renameColumn(spark, dir, payloadName, to)
-              }
-              assert(e.getMessage.contains("CHECK"),
-                s"round $round step $step: wrong rename refusal: $e")
-            } else {
-              TxLog.renameColumn(spark, dir, payloadName, to)
-              payloadName = to
-            }
-          case 10 => // stats surface: counts from metadata only
+          case 9 => // stats surface: counts from metadata only
             TxLog.statsAggregate(spark, dir).foreach { stats =>
               val got = stats.map(s => s.partition -> s.rows).toMap
               val exp = model.groupBy { case (k, _) => partOf(k) }
@@ -179,35 +144,10 @@ class TxLogModelFuzzSpec extends SparkSpec {
               assert(got == exp,
                 s"round $round step $step: statsAggregate $got != model $exp")
             }
-          case 11 => // CHECK constraint lifecycle + write-path rejection
-            constraintCol match {
-              case None =>
-                TxLog.addCheckConstraint(spark, dir, "nonneg",
-                  s"$payloadName >= 0")
-                constraintCol = Some(payloadName)
-                // BOTH write paths must reject a violating batch and
-                // leave the table untouched (post-step check proves it)
-                val badUp = Seq(("p0#k00", "p0", -1L))
-                  .toDF("_docId", "str_databaseid", payloadName)
-                val em = intercept[IllegalArgumentException] {
-                  TxLog.merge(spark, dir, badUp)
-                }
-                assert(em.getMessage.contains("nonneg"))
-                appendSeq += 1
-                val badAp = Seq((s"p0#a${"%04d".format(appendSeq)}", "p0", -1L))
-                  .toDF("_docId", "str_databaseid", payloadName)
-                val ea = intercept[IllegalArgumentException] {
-                  TxLog.append(spark, dir, badAp)
-                }
-                assert(ea.getMessage.contains("nonneg"))
-              case Some(_) =>
-                TxLog.dropCheckConstraint(spark, dir, "nonneg")
-                constraintCol = None
-            }
-          case 12 => // tag: pin this state; must survive vacuum + restore
+          case 10 => // tag: pin this state; must survive vacuum + restore
             TxLog.tag(spark, dir, s"t$step")
-            tagModels(s"t$step") = (model, payloadName)
-          case 13 => // drop one whole partition (metadata-only delete)
+            tagModels(s"t$step") = model
+          case 11 => // drop one whole partition (metadata-only delete)
             val p = s"p${r.next() % 2}"
             TxLog.deletePartitions(spark, dir, Set(p))
             model = model.filter { case (k, _) => partOf(k) != p }
@@ -215,8 +155,6 @@ class TxLogModelFuzzSpec extends SparkSpec {
         val hv = headVersion()
         opsLog += s"step $step: op=$opKind -> v$hv"
         versionModels(hv) = model
-        nameAtVersion(hv) = payloadName
-        constraintAtVersion(hv) = constraintCol
         checkReadEqualsModel(step)
       }
 
@@ -224,9 +162,8 @@ class TxLogModelFuzzSpec extends SparkSpec {
       val probeVersions = versionModels.keys.filter(_ >= floor).toVector
       // time travel: every surviving recorded version reads back exactly
       probeVersions.foreach { v =>
-        // a version reads back under the LOGICAL names live AT v
         val got = TxLog.read(spark, dir, asOfVersion = Some(v))
-          .select(col("_docId"), col(nameAtVersion(v)))
+          .select(col("_docId"), col("payload"))
           .as[(String, Long)].collect().toMap
         assert(got == versionModels(v),
           s"round $round: asOfVersion($v) diverged from the recorded model")
@@ -238,10 +175,8 @@ class TxLogModelFuzzSpec extends SparkSpec {
           val j = (r.next() % probeVersions.length).toInt
           val (v1, v2) = (probeVersions(math.min(i, j)),
             probeVersions(math.max(i, j)))
-          // the feed surfaces BOTH sides under the newer version's
-          // logical names (applyColMap(toS.colMap))
           val ch = TxLog.changes(spark, dir, v1, v2)
-            .select(col("_docId"), col(nameAtVersion(v2)), col("_change_type"))
+            .select(col("_docId"), col("payload"), col("_change_type"))
             .as[(String, Long, String)].collect()
           // the feed speaks the Delta CDC vocabulary: a key changed in
           // place arrives as an update_preimage/update_postimage pair,
@@ -262,40 +197,16 @@ class TxLogModelFuzzSpec extends SparkSpec {
       }
       // tagged states read back exactly — including tags pinned BELOW a
       // later vacuum's horizon (vacuum retains tagged versions' files)
-      tagModels.foreach { case (name, (m, pn)) =>
+      tagModels.foreach { case (name, m) =>
         val got = TxLog.readTag(spark, dir, name)
-          .select(col("_docId"), col(pn)).as[(String, Long)].collect().toMap
+          .select(col("_docId"), col("payload")).as[(String, Long)].collect().toMap
         assert(got == m, s"round $round: readTag($name) diverged")
-      }
-      // shallow clone: borrows the head's files by reference; reads the
-      // same state under the same logical names, and later mutations of
-      // the SOURCE never leak into the clone (snapshot isolation across
-      // tables). Cheap: metadata-only, no bytes copied.
-      locally {
-        val cloneDir = java.nio.file.Files
-          .createTempDirectory(s"graft-modelfz-clone-$round").toString + "/t"
-        TxLog.shallowClone(spark, dir, cloneDir)
-        val before = model
-        val beforeName = payloadName
-        // mutate the source AFTER the clone
-        TxLog.merge(spark, dir,
-          Seq(("p0#k00", "p0", 424242L))
-            .toDF("_docId", "str_databaseid", payloadName))
-        model = model + ("p0#k00" -> 424242L)
-        versionModels(headVersion()) = model
-        nameAtVersion(headVersion()) = payloadName
-        constraintAtVersion(headVersion()) = constraintCol
-        val got = TxLog.read(spark, cloneDir)
-          .select(col("_docId"), col(beforeName))
-          .as[(String, Long)].collect().toMap
-        assert(got == before,
-          s"round $round: shallow clone diverged from the state it pinned")
       }
       info(s"round $round: ${opsLog.mkString("; ")}")
       // partition-pruned read: exact per-partition content
       Seq("p0", "p1").foreach { p =>
         val got = TxLog.read(spark, dir, partitions = Some(Set(p)))
-          .select(col("_docId"), col(payloadName))
+          .select(col("_docId"), col("payload"))
           .as[(String, Long)].collect().toMap
         assert(got == model.filter { case (k, _) => partOf(k) == p },
           s"round $round: partition-pruned read of $p diverged")

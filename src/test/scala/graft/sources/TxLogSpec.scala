@@ -629,6 +629,45 @@ class TxLogSpec extends SparkSpec {
     assert(tableRows(dir) == Set(("p0#a1", "x")))
   }
 
+  test("append: a narrow batch gets the column-set diagnosis") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-tx-anb").toString
+    TxLog.merge(spark, dir, docs(("dbA#a1", "dbA", "x")))
+    // append never widens or null-fills: a batch missing a table column
+    // is a caller error and must say so before anything stages
+    val narrow = Seq(("dbA#a2", "dbA")).toDF("_docId", "str_databaseid")
+    val e = intercept[IllegalArgumentException] {
+      TxLog.append(spark, dir, narrow)
+    }
+    assert(e.getMessage.contains("batch columns"),
+      s"expected the column-set diagnosis, got: ${e.getMessage}")
+    assert(tableRows(dir) == Set(("dbA#a1", "x")))
+  }
+
+  test("timestamp time travel resolves the newest commit at-or-before ts") {
+    def docs(rows: (String, String, Int)*) =
+      rows.toSeq.toDF("_docId", "str_databaseid", "qty")
+    val dir = java.nio.file.Files.createTempDirectory("graft-ts1").toString
+    TxLog.merge(spark, dir, docs(("dbA#a1", "dbA", 1)))
+    // commit mtimes have second-ish granularity on some filesystems —
+    // separate the two commits by a comfortable margin
+    Thread.sleep(1100)
+    val between = System.currentTimeMillis()
+    Thread.sleep(1100)
+    TxLog.merge(spark, dir, docs(("dbA#a1", "dbA", 2)))
+    assert(TxLog.versionAt(spark, dir, between) == 0L)
+    assert(TxLog.versionAt(spark, dir, System.currentTimeMillis()) == 1L)
+    assert(TxLog.readAsOfTimestamp(spark, dir, between)
+      .select("qty").as[Int].collect().toSeq == Seq(1))
+    // the format option resolves the same way
+    assert(spark.read.format("txlog")
+      .option("timestampAsOf", between.toString).load(dir)
+      .select("qty").as[Int].collect().toSeq == Seq(1))
+    // before the first commit: no table state existed — loud failure
+    intercept[IllegalArgumentException] {
+      TxLog.versionAt(spark, dir, 1000L)
+    }
+  }
+
   test("type stability: a field NAMED 'avoid' is not exempt; real void still widens") {
     // regression: the void exemption was a catalogString substring
     // test, so struct<avoid:int> vs struct<avoid:string> slipped the
