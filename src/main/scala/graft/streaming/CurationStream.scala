@@ -43,7 +43,7 @@ import graft.sources.TxLog
   * after a crash in any window re-derives the same verdicts: before the
   * folds the state is unchanged; after the signature fold the store
   * screen sees the batch's own signatures, which the self-pair filter
-  * (`b_id =!= c_id`) cancels; after the Bloom write the probe's false
+  * (`b_id =!= c_id`) cancels; after the Bloom commit the probe's false
   * candidates die in the index-confirm join; after the index append the
   * doc_id redelivery guard makes the whole batch a no-op — and a doc in
   * the index implies its business rows committed, because business
@@ -87,7 +87,7 @@ object CurationStream {
         size(filter(col("tk"), x => x.isInCollection(stops))).cast("long"))
       .drop("tk")
 
-  private def keyed(df: DataFrame): DataFrame =
+  private[streaming] def keyed(df: DataFrame): DataFrame =
     df.withColumn("_shard", pmod(col("doc_id"), lit(Shards)).cast("string"))
       .withColumn("_docId",
         concat(col("_shard"), lit("#"), col("doc_id").cast("string")))

@@ -147,64 +147,63 @@ object DocMaintenance {
     * `maxSubmitsPerTrigger`: the submission protocol is inherently
     * driver-side (one workflow call per key), but a pathological
     * backfill batch must not collect unbounded keys. Keys beyond the
-    * cap SPILL to `spillDir` as parquet and drain on subsequent
-    * triggers (each trigger takes the ordered head of spill ∪ new,
-    * via a TakeOrdered plan — the driver never materializes more than
-    * the cap). Pass `spillDir = None` only when the source is known
-    * batch-bounded (e.g. a queue feed): overflow keys are then
-    * DEFERRED-LESS — the cap still holds but the remainder is dropped
-    * with a warning, matching at-most-once submission. */
+    * cap SPILL to `spillDir`, a [[graft.sources.TxLog]] table
+    * partitioned by `databaseId` and keyed `databaseId#assetId`, and
+    * drain on subsequent triggers (each trigger takes the ordered head
+    * of spill ∪ new, via a TakeOrdered plan — the driver never
+    * materializes more than the cap). Each trigger commits one merge
+    * that upserts the untaken remainder and removes the taken keys; a
+    * crash before that commit leaves the spill at its previous version
+    * and the replay resubmits (at-least-once — submission is idempotent
+    * per the reference's redelivery semantics). Pass `spillDir = None`
+    * only when the source is known batch-bounded (e.g. a queue feed):
+    * overflow keys are then DEFERRED-LESS — the cap still holds but the
+    * remainder is dropped with a warning, matching at-most-once
+    * submission. */
   def autoExecOnArrival(
       newFiles: DataFrame,
       submit: (String, String) => Unit,
       maxSubmitsPerTrigger: Int = 10000,
-      spillDir: Option[String] = None): org.apache.spark.sql.streaming.StreamingQuery =
+      spillDir: Option[String] = None): org.apache.spark.sql.streaming.StreamingQuery = {
+    val keys = Seq("databaseId", "assetId")
+    def keyed(df: DataFrame): DataFrame = df.select(
+      concat(col("databaseId"), lit("#"), col("assetId")).as("_key"),
+      col("assetId"), col("databaseId"))
+    def commit(spark: SparkSession, p: String, rest: DataFrame,
+        taken: DataFrame): Unit =
+      graft.sources.TxLog.merge(spark, p, keyed(rest), taken,
+        keyCol = "_key", partitionCol = "databaseId")
+    // an empty merge creates the spill table (schema only) and is a
+    // no-op on an existing one, so every trigger reads a table
+    spillDir.foreach { p =>
+      val spark = newFiles.sparkSession
+      import spark.implicits._
+      commit(spark, p, Seq.empty[(String, String)].toDF(keys: _*), null)
+    }
     newFiles.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val spark = batch.sparkSession
-        val incoming = batch.select("databaseId", "assetId").distinct()
-        val spillPath = spillDir.map(p => new org.apache.hadoop.fs.Path(p))
-        val fs = spillPath.map(_.getFileSystem(
-          spark.sessionState.newHadoopConf()))
-        // crash recovery for the rewrite protocol (all three windows —
-        // partial tmp, committed-but-unswapped tmp, deleted live store —
-        // see AtomicSpill, the ONE shared copy of this logic)
-        (spillPath, fs) match {
-          case (Some(p), Some(f)) => AtomicSpill.recover(f, p)
-          case _ => ()
+        import spark.implicits._
+        val incoming = batch.select(keys.map(col): _*).distinct()
+        val spill = spillDir.map(p => (p, graft.sources.TxLog.read(spark, p)))
+        val pending = spill.fold(incoming) { case (_, s) =>
+          incoming.unionByName(s.select(keys.map(col): _*)).distinct()
         }
-        val hasSpill = (spillPath, fs) match {
-          case (Some(p), Some(f)) => f.exists(p)
-          case _ => false
-        }
-        val pending =
-          if (hasSpill)
-            incoming.unionByName(
-              spark.read.parquet(spillDir.get)
-                .select("databaseId", "assetId")).distinct()
-          else incoming
         // ordered head → TakeOrderedAndProject: the driver sees at most
         // maxSubmitsPerTrigger rows regardless of batch size
-        val taken = pending.orderBy("databaseId", "assetId")
+        val taken = pending.orderBy(keys.map(col): _*)
           .limit(maxSubmitsPerTrigger).collect()
         taken.foreach(r => submit(r.getString(0), r.getString(1)))
-        (spillPath, fs) match {
-          case (Some(p), Some(f)) =>
-            // remainder = pending minus the (≤cap, broadcastable) taken
-            // set; rewrite the spill via temp + rename, with the
-            // orphaned-tmp recovery at the top of the trigger covering
-            // the delete→rename crash window — so a crash at any point
-            // never loses queued keys (at-least-once resubmission is
-            // fine — submission is idempotent per the reference's
-            // redelivery semantics)
-            import spark.implicits._
-            val takenDf = taken.map(r => (r.getString(0), r.getString(1)))
-              .toSeq.toDF("databaseId", "assetId")
-            val rest = pending.join(org.apache.spark.sql.functions
-              .broadcast(takenDf), Seq("databaseId", "assetId"), "left_anti")
-            AtomicSpill.rewrite(rest, f, p)
-          case _ =>
+        spill match {
+          case Some((p, s)) =>
+            // the (≤cap, broadcastable) taken set: new arrivals outside
+            // it are upserted, spilled keys inside it are removed
+            val takenDf = broadcast(taken.map(r => (r.getString(0), r.getString(1)))
+              .toSeq.toDF(keys: _*))
+            commit(spark, p, incoming.join(takenDf, keys, "left_anti"),
+              s.join(takenDf, keys, "left_semi").select("_key"))
+          case None =>
             if (taken.length == maxSubmitsPerTrigger)
               org.slf4j.LoggerFactory.getLogger(getClass).warn(
                 s"autoExecOnArrival: batch hit the $maxSubmitsPerTrigger " +
@@ -212,6 +211,7 @@ object DocMaintenance {
         }
       }
       .start()
+  }
 
   /** Run a CDC source as a Structured Streaming query that maintains the
     * doc table at `tablePath`: each micro-batch rebuilds the affected docs

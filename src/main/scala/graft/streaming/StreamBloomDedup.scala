@@ -1,11 +1,12 @@
 package graft.streaming
 
-import java.io.{ByteArrayOutputStream, DataOutputStream}
+import java.io.ByteArrayOutputStream
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.sketch.BloomFilter
+
+import graft.sources.TxLog
 
 /** Incremental EXACT dedup of a document stream against everything seen
   * so far — the streaming twin of [[graft.llmops.BloomDedup]], with the
@@ -15,8 +16,8 @@ import org.apache.spark.util.sketch.BloomFilter
   *  1. redelivery guard: rows whose `doc_id` is already in the key
   *     index are dropped (anti-join), so at-least-once delivery of an
   *     already-INDEXED batch never re-emits or re-indexes a document.
-  *     The fold is not atomic: a crash in the window after the bloom
-  *     write but before the index append leaves those doc_ids
+  *     The fold is two commits, bloom first: a crash after the bloom
+  *     commit but before the index commit leaves those doc_ids
   *     unindexed, and a replay of that micro-batch re-emits them
   *     (exactness is preserved — this write order can only re-emit,
   *     never silently drop, which is why the bloom goes first);
@@ -37,37 +38,29 @@ import org.apache.spark.util.sketch.BloomFilter
   * batch-mode exact dedup over the union of those batches
   * (StreamBloomDedupSpec asserts equality against the full recompute).
   *
-  * The blob lives beside the index (`bloom.bin`, `numBits/8` bytes) and
-  * is rewritten atomically via temp + rename each fold — the same
-  * local-commit discipline as [[graft.sources.TxLog]]'s coordinator.
+  * Both states are [[TxLog]] tables under `stateDir`: the key index
+  * (`key_index`, [[TxLog.append]] in [[CurationStream]]'s `_shard` /
+  * `_docId` shape) and the blob (`bloom`, one binary row of
+  * `numBits/8` bytes replaced by [[TxLog.merge]]). Each commit is
+  * atomic, so a crash never leaves a half-written or missing blob
+  * beside a populated index.
   */
 object StreamBloomDedup {
 
   private def indexPath(stateDir: String) = s"$stateDir/key_index"
-  private def bloomPath(stateDir: String) = new Path(s"$stateDir/bloom.bin")
+  private def bloomPath(stateDir: String) = s"$stateDir/bloom"
+
+  private def bytesOf(bf: BloomFilter): Array[Byte] = {
+    val bos = new ByteArrayOutputStream()
+    bf.writeTo(bos)
+    bos.toByteArray
+  }
 
   /** Standing blob, or None before the first fold. */
-  def readBloom(spark: SparkSession, stateDir: String): Option[BloomFilter] = {
-    val p = bloomPath(stateDir)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try Some(BloomFilter.readFrom(in)) finally in.close()
-    }
-  }
-
-  private def writeBloom(spark: SparkSession, stateDir: String, bf: BloomFilter): Unit = {
-    val p = bloomPath(stateDir)
-    val tmp = new Path(p.getParent, s".${p.getName}.tmp")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val out = fs.create(tmp, true)
-    try bf.writeTo(out) finally out.close()
-    if (!fs.rename(tmp, p)) {
-      fs.delete(p, false)
-      if (!fs.rename(tmp, p)) sys.error(s"cannot publish bloom state at $p")
-    }
-  }
+  def readBloom(spark: SparkSession, stateDir: String): Option[BloomFilter] =
+    if (!TxLog.isTable(spark, bloomPath(stateDir))) None
+    else TxLog.read(spark, bloomPath(stateDir)).select("bf").collect()
+      .headOption.map(r => BloomFilter.readFrom(r.getAs[Array[Byte]](0)))
 
   /** Read-only screen of one micro-batch of (doc_id, k): replayed
     * (already-indexed) doc_ids are dropped; the rest come back flagged
@@ -81,7 +74,8 @@ object StreamBloomDedup {
       batch: DataFrame,
       stateDir: String): DataFrame = {
     graft.functions.GraftFunctions.register(spark)
-    val existing = StreamState.readIfExists(spark, indexPath(stateDir))
+    val existing = Option.when(TxLog.isTable(spark, indexPath(stateDir)))(
+      TxLog.read(spark, indexPath(stateDir)))
     val standing = readBloom(spark, stateDir)
 
     // 1. redelivery guard on doc_id
@@ -97,13 +91,8 @@ object StreamBloomDedup {
     // codegen'd filter.
     val flaggedVsSeen = (standing, existing) match {
       case (Some(bf), Some(idx)) =>
-        val blob = {
-          val bos = new ByteArrayOutputStream()
-          bf.writeTo(bos)
-          bos.toByteArray
-        }
-        val cand = fresh0.withColumn("__cand",
-          call_function("graft_bloom_contains", lit(blob), xxhash64(col("k"))))
+        val cand = fresh0.withColumn("__cand", call_function(
+          "graft_bloom_contains", lit(bytesOf(bf)), xxhash64(col("k"))))
         val misses = cand.filter(!col("__cand")).withColumn("dup_seen", lit(false))
         val hits = cand.filter(col("__cand"))
           .join(idx.select(col("k").as("__ik")).distinct()
@@ -159,14 +148,13 @@ object StreamBloomDedup {
         case Some(bf) => bf.mergeInPlace(batchBf)
         case None => batchBf
       }
-      writeBloom(spark, stateDir, merged)
+      import spark.implicits._
+      TxLog.merge(spark, bloomPath(stateDir),
+        Seq(("bloom#", bytesOf(merged), "bloom")).toDF("_key", "bf", "_part"),
+        keyCol = "_key", partitionCol = "_part")
     }
-    // one index file per micro-batch (guide §6): the delta is
-    // batch-bounded and already sits in checkpoint blocks, so coalesce
-    // reads them in one task without a shuffle — un-coalesced, every
-    // upstream task appends its own tiny file and the confirm join
-    // re-lists/re-opens all of them each batch
-    processed.coalesce(1).write.mode("append").parquet(indexPath(stateDir))
+    TxLog.append(spark, indexPath(stateDir), CurationStream.keyed(processed),
+      keyCol = "_docId", partitionCol = "_shard")
   }
 
   /** Process one micro-batch of (doc_id, k): returns the batch rows

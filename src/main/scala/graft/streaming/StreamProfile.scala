@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.llmops.Text
+import graft.sources.TxLog
 
 /** Incremental (streaming) corpus profiling — the micro-batch twin of
   * `llm_profile_vocab`: per-source document / posting counts and the
@@ -30,26 +31,22 @@ import graft.llmops.Text
   * a document with no shingles (under 3 tokens) is NOT part of the
   * profile — both sides count shingled docs only.
   *
-  * STATE = an APPEND-ONLY delta log, never an overwrite: per processed
-  * batch one row per source `(batch_id, source, n_docs, n_postings,
-  * gram_sketch)`, plus a doc-id ledger `(batch_id, doc_id)`. The
-  * profile is merge-on-read (counters sum, sketches `hll_union_agg` —
-  * a Delta-style log + compaction-free merge; sources × batches rows,
-  * trivially re-foldable offline if the log ever gets long). This
-  * makes the commit protocol crash-safe without a transaction layer:
+  * STATE = two [[TxLog]] tables under `stateDir`: a delta log with one
+  * row per (batch, source) `(batch_id, source, n_docs, n_postings,
+  * gram_sketch)`, merged keyed on `(batch_id, source)`, and a doc-id
+  * ledger `(batch_id, doc_id)` merged keyed on `doc_id`. The profile is
+  * merge-on-read (counters sum, sketches `hll_union_agg`; sources ×
+  * batches rows, trivially re-foldable offline if the log ever gets
+  * long). Each merge is one atomic commit:
   *
   *  - exactly-once across batches: docs seen under OTHER batch ids are
   *    anti-joined away; within-batch redelivery is dropped by a
   *    `dropDuplicates(doc_id)`;
   *  - idempotent retry of the SAME batch id (foreachBatch redelivery):
   *    the ledger filter EXCLUDES the current batch id, so a retry
-  *    re-derives the same delta; the delta append is skipped when the
-  *    batch id is already logged. A crash between the ledger append
-  *    and the delta append therefore re-runs cleanly — duplicate
-  *    ledger rows are harmless (set-membership semantics), and the
-  *    delta lands exactly once;
-  *  - no overwrite ⇒ no window where the standing profile's only copy
-  *    is mid-rewrite or in non-fault-tolerant executor state.
+  *    re-derives the same delta and both keyed merges rewrite identical
+  *    rows. A crash between the ledger and the delta commit therefore
+  *    re-runs cleanly, and the delta lands exactly once.
   */
 object StreamProfile {
 
@@ -100,38 +97,37 @@ object StreamProfile {
     * standing profile. Safe to re-invoke with the same batchId. */
   def processBatch(spark: SparkSession, batch: DataFrame, stateDir: String,
       batchId: Long): DataFrame = {
-    val ledger = StreamState.readIfExists(spark, ledgerPath(stateDir))
-    val deltas = StreamState.readIfExists(spark, deltaPath(stateDir))
-    val alreadyLogged = deltas.exists(d =>
-      !d.filter(col("batch_id") === batchId).isEmpty)
-    if (!alreadyLogged) {
-      // exclude the CURRENT batch id from the dedup ledger: a retry of
-      // this batch must re-derive the same delta, not an empty one
-      val fresh = (ledger match {
-        case Some(l) => batch.join(
-          l.filter(col("batch_id") =!= batchId).select("doc_id"),
-          Seq("doc_id"), "left_anti")
-        case None => batch
-      }).dropDuplicates("doc_id").persist()
-      fresh.select(lit(batchId).as("batch_id"), col("doc_id"))
-        .write.mode("append").parquet(ledgerPath(stateDir))
-      withBatchProfile(fresh) { profile =>
-        profile
-          .select(lit(batchId).as("batch_id"), col("source"),
-            col("n_docs"), col("n_postings"), col("gram_sketch"))
-          .write.mode("append").parquet(deltaPath(stateDir))
-      }
-      fresh.unpersist()
+    // exclude the CURRENT batch id from the dedup ledger: a retry of
+    // this batch must re-derive the same delta, not an empty one
+    val seen = Option.when(TxLog.isTable(spark, ledgerPath(stateDir)))(
+      TxLog.read(spark, ledgerPath(stateDir))
+        .filter(col("batch_id") =!= batchId).select("doc_id"))
+    val fresh = seen.fold(batch)(batch.join(_, Seq("doc_id"), "left_anti"))
+      .dropDuplicates("doc_id").persist()
+    TxLog.merge(spark, ledgerPath(stateDir), CurationStream.keyed(
+        fresh.select(lit(batchId).as("batch_id"), col("doc_id"))),
+      keyCol = "_docId", partitionCol = "_shard")
+    withBatchProfile(fresh) { profile =>
+      val batchPart = lit(batchId.toString)
+      TxLog.merge(spark, deltaPath(stateDir),
+        profile.select(lit(batchId).as("batch_id"), col("source"),
+          col("n_docs"), col("n_postings"), col("gram_sketch"),
+          concat(batchPart, lit("#"), col("source")).as("_key"),
+          batchPart.as("_batch")),
+        keyCol = "_key", partitionCol = "_batch")
     }
+    fresh.unpersist()
     readProfile(spark, stateDir)
   }
 
   /** Merge-on-read of the delta log, with the vocabulary estimate
     * evaluated: (source, n_docs, n_postings, n_grams_est). Before any
-    * batch has committed a delta the log path does not exist; that is a
-    * valid empty profile, not an error (same guard as StreamDedup). */
+    * batch has committed a delta the log does not exist; that is a
+    * valid empty profile, not an error. */
   def readProfile(spark: SparkSession, stateDir: String): DataFrame =
-    StreamState.readIfExists(spark, deltaPath(stateDir)).getOrElse(
+    (if (TxLog.isTable(spark, deltaPath(stateDir)))
+      TxLog.read(spark, deltaPath(stateDir))
+    else
       spark.range(0).select(lit("").as("source"),
         lit(0L).as("n_docs"), lit(0L).as("n_postings"),
         lit(Array.emptyByteArray).as("gram_sketch")))

@@ -182,53 +182,6 @@ class DocMaintenanceSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("autoExecOnArrival recovers an orphaned spill tmp (crash between delete and rename)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-orphan").toString
-    val base = java.nio.file.Files.createTempDirectory("graft-orphan-spill")
-    val spill = base.toString + "/keys"
-    // simulate a crash AFTER delete(p) and BEFORE rename(tmp, p): only
-    // the tmp exists and holds the queued keys, with the protocol's
-    // own commit marker (the write had fully committed)
-    val tmpPath = base.toString + "/.keys.tmp"
-    Seq(("dbQ", "queued1"), ("dbQ", "queued2"))
-      .toDF("databaseId", "assetId")
-      .write.mode("overwrite").parquet(tmpPath)
-    assert(new java.io.File(tmpPath, "_GRAFT_COMMIT").createNewFile(),
-      "fixture: commit marker")
-    val files = Seq(("db1", "a1", "f1")).toDF("databaseId", "assetId", "fileKey")
-    files.write.mode("overwrite").parquet(dir)
-    val submitted = scala.collection.concurrent.TrieMap.empty[(String, String), Int]
-    val stream = spark.readStream.schema(files.schema).parquet(dir)
-    val q = DocMaintenance.autoExecOnArrival(stream,
-      (db, a) => { submitted.updateWith((db, a))(v => Some(v.getOrElse(0) + 1)); () },
-      maxSubmitsPerTrigger = 100, spillDir = Some(spill))
-    try q.processAllAvailable() finally q.stop()
-    // the orphaned tmp was promoted: its keys submitted, nothing lost
-    assert(submitted.keySet == Set(
-      ("dbQ", "queued1"), ("dbQ", "queued2"), ("db1", "a1")))
-    assert(!new java.io.File(tmpPath).exists(), "tmp not consumed")
-
-    // and the both-exist case (crash between tmp write and delete):
-    // the live spill wins, the stale/partial tmp is discarded
-    val base2 = java.nio.file.Files.createTempDirectory("graft-orphan2")
-    val spill2 = base2.toString + "/keys"
-    Seq(("dbL", "live1")).toDF("databaseId", "assetId")
-      .write.mode("overwrite").parquet(spill2)
-    val tmp2 = base2.toString + "/.keys.tmp"
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(tmp2),
-      Array[Byte](1, 2, 3)) // partial garbage — must never be read
-    val dir2 = java.nio.file.Files.createTempDirectory("graft-orphan-d2").toString
-    files.write.mode("overwrite").parquet(dir2)
-    val submitted2 = scala.collection.concurrent.TrieMap.empty[(String, String), Int]
-    val stream2 = spark.readStream.schema(files.schema).parquet(dir2)
-    val q2 = DocMaintenance.autoExecOnArrival(stream2,
-      (db, a) => { submitted2.updateWith((db, a))(v => Some(v.getOrElse(0) + 1)); () },
-      maxSubmitsPerTrigger = 100, spillDir = Some(spill2))
-    try q2.processAllAvailable() finally q2.stop()
-    assert(submitted2.keySet == Set(("dbL", "live1"), ("db1", "a1")))
-  }
-
   test("mergeDocsTx rewrites only touched partitions; redelivery converges") {
     import graft.sources.TxLog
     val dir = java.nio.file.Files.createTempDirectory("graft-docs").toString

@@ -3,11 +3,12 @@ package graft.streaming
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.sources.TxLog
 
 /** S7 — bounded-redelivery re-queue semantics (see [[Requeue]]): failed
   * deliveries redeliver with an incremented receive count, park on the
-  * DLQ after `maxReceiveCount` failures, and the pending store survives
-  * the same crash windows the autoExec spill does.
+  * DLQ after `maxReceiveCount` failures, and a trigger that fails before
+  * its one TxLog commit leaves the state table untouched.
   */
 class RequeueSpec extends SparkSpec {
   import spark.implicits._
@@ -27,8 +28,7 @@ class RequeueSpec extends SparkSpec {
 
   test("transient failures redeliver and succeed; poison parks on the DLQ") {
     val src = tmpDir("graft-rq-src")
-    val pend = tmpDir("graft-rq-pend") + "/queue"
-    val dlq = tmpDir("graft-rq-dlq") + "/dlq"
+    val state = tmpDir("graft-rq-state") + "/state"
     val attempts = scala.collection.concurrent.TrieMap.empty[String, Int]
     // k_flaky fails its first 2 deliveries; k_poison always fails
     val deliver = (k: String, _: String) => {
@@ -43,7 +43,7 @@ class RequeueSpec extends SparkSpec {
       .toDF("key", "payload").write.mode("append").parquet(src)
     val stream = spark.readStream
       .schema("key STRING, payload STRING").parquet(src)
-    val q = Requeue.requeueOnFailure(stream, deliver, pend, dlq,
+    val q = Requeue.requeueOnFailure(stream, deliver, state,
       maxReceiveCount = 4)
     try {
       q.processAllAvailable()
@@ -54,18 +54,17 @@ class RequeueSpec extends SparkSpec {
     assert(attempts("k_ok") == 1)
     assert(attempts("k_flaky") == 3, s"flaky attempts: ${attempts.get("k_flaky")}")
     assert(attempts("k_poison") == 4, "poison must stop at maxReceiveCount")
-    val parked = spark.read.parquet(dlq)
+    val parked = Requeue.parked(spark, state)
       .select("key", "receive_count").as[(String, Int)].collect().toSet
     assert(parked == Set(("k_poison", 4)))
     // nothing but (possibly) nothing pending — flaky drained, poison parked
-    assert(Requeue.pendingCount(spark, pend) == 0L,
+    assert(Requeue.pendingCount(spark, state) == 0L,
       "pending store must drain once every key succeeded or parked")
   }
 
   test("backoffTriggers delays redelivery by whole delivery rounds") {
     val src = tmpDir("graft-rq2-src")
-    val pend = tmpDir("graft-rq2-pend") + "/queue"
-    val dlq = tmpDir("graft-rq2-dlq") + "/dlq"
+    val state = tmpDir("graft-rq2-state") + "/state"
     val log = scala.collection.mutable.ArrayBuffer.empty[String]
     val deliver = (k: String, _: String) =>
       if (k != "k") true // pump rows always succeed
@@ -74,7 +73,7 @@ class RequeueSpec extends SparkSpec {
     val stream = spark.readStream
       .schema("key STRING, payload STRING").parquet(src)
     // backoff of 3 triggers after the 1st failure
-    val q = Requeue.requeueOnFailure(stream, deliver, pend, dlq,
+    val q = Requeue.requeueOnFailure(stream, deliver, state,
       maxReceiveCount = 5, backoffTriggers = _ => 3L)
     try {
       q.processAllAvailable()
@@ -86,13 +85,12 @@ class RequeueSpec extends SparkSpec {
       pump(src, q, 1)
       assert(log.size == 2, s"expected redelivery after 3 rounds: $log")
     } finally q.stop()
-    assert(Requeue.pendingCount(spark, pend) == 0L)
+    assert(Requeue.pendingCount(spark, state) == 0L)
   }
 
   test("per-trigger cap bounds the delivery round; backlog drains in order") {
     val src = tmpDir("graft-rq3-src")
-    val pend = tmpDir("graft-rq3-pend") + "/queue"
-    val dlq = tmpDir("graft-rq3-dlq") + "/dlq"
+    val state = tmpDir("graft-rq3-state") + "/state"
     val delivered = scala.collection.mutable.ArrayBuffer.empty[String]
     val deliver = (k: String, _: String) => {
       delivered.synchronized { delivered += k }; true
@@ -101,53 +99,24 @@ class RequeueSpec extends SparkSpec {
     keys.toDF("key", "payload").write.mode("append").parquet(src)
     val stream = spark.readStream
       .schema("key STRING, payload STRING").parquet(src)
-    val q = Requeue.requeueOnFailure(stream, deliver, pend, dlq,
+    val q = Requeue.requeueOnFailure(stream, deliver, state,
       maxPerTrigger = 10)
     try {
       q.processAllAvailable()
       assert(delivered.size == 10, "first round must stop at the cap")
-      assert(Requeue.pendingCount(spark, pend) == 15L)
+      assert(Requeue.pendingCount(spark, state) == 15L)
       pump(src, q, 3)
     } finally q.stop()
     // every real key delivered exactly once, in ordered-head batches
     val real = delivered.filterNot(_.startsWith("__pump"))
     assert(real.size == 25 && real.distinct.size == 25)
     assert(real.take(10) == real.take(10).sorted)
-    assert(Requeue.pendingCount(spark, pend) == 0L)
-  }
-
-  test("a PARTIAL pending tmp (crash mid-write, no live store) is discarded, not promoted") {
-    val src = tmpDir("graft-rq5-src")
-    val base = tmpDir("graft-rq5-pend")
-    val pend = base + "/queue"
-    val dlq = tmpDir("graft-rq5-dlq") + "/dlq"
-    // crash DURING the first rewrite: tmp exists as a parquet dir but
-    // the protocol's own _GRAFT_COMMIT marker never landed. The plain
-    // df.write fixture leaves parquet's _SUCCESS behind — deliberately
-    // kept, pinning that recovery keys on AtomicSpill's marker, not on
-    // _SUCCESS (whose presence is a Hadoop conf artifact)
-    val tmp = new java.io.File(base, ".queue.tmp")
-    Seq(("k_partial", "p", 0, 0L))
-      .toDF("key", "payload", "receive_count", "not_before")
-      .write.mode("overwrite").parquet(tmp.toString)
-    assert(new java.io.File(tmp, "_SUCCESS").exists(), "fixture: _SUCCESS present")
-    val delivered = scala.collection.concurrent.TrieMap.empty[String, Int]
-    Seq(("k_new", "p")).toDF("key", "payload").write.mode("append").parquet(src)
-    val stream = spark.readStream
-      .schema("key STRING, payload STRING").parquet(src)
-    val q = Requeue.requeueOnFailure(stream,
-      (k, _) => { delivered.updateWith(k)(v => Some(v.getOrElse(0) + 1)); true },
-      pend, dlq)
-    // must not wedge on (or resurrect keys from) the uncommitted tmp
-    try q.processAllAvailable() finally q.stop()
-    assert(delivered.keySet == Set("k_new"), s"${delivered.keySet}")
-    assert(!tmp.exists(), "partial tmp must be discarded")
+    assert(Requeue.pendingCount(spark, state) == 0L)
   }
 
   test("backoff survives a restart: rounds come from the durable clock, not batchId") {
     val src = tmpDir("graft-rq6-src")
-    val pend = tmpDir("graft-rq6-pend") + "/queue"
-    val dlq = tmpDir("graft-rq6-dlq") + "/dlq"
+    val state = tmpDir("graft-rq6-state") + "/state"
     val log = scala.collection.mutable.ArrayBuffer.empty[String]
     val deliver = (k: String, _: String) =>
       if (k != "k") true
@@ -155,7 +124,7 @@ class RequeueSpec extends SparkSpec {
     Seq(("k", "p")).toDF("key", "payload").write.mode("append").parquet(src)
     def freshQuery() = Requeue.requeueOnFailure(
       spark.readStream.schema("key STRING, payload STRING").parquet(src),
-      deliver, pend, dlq, maxReceiveCount = 5, backoffTriggers = _ => 2L)
+      deliver, state, maxReceiveCount = 5, backoffTriggers = _ => 2L)
     val q1 = freshQuery()
     try { q1.processAllAvailable(); assert(log.size == 1) } finally q1.stop()
     // RESTART without a checkpoint: the new query's batchIds start at 0
@@ -171,63 +140,64 @@ class RequeueSpec extends SparkSpec {
       pump(src, q2, 1) // round 3 reaches not_before → success
       assert(log.size == 2, s"expected post-restart redelivery: $log")
     } finally q2.stop()
-    assert(Requeue.pendingCount(spark, pend) == 0L)
+    assert(Requeue.pendingCount(spark, state) == 0L)
   }
 
-  test("an orphaned clock tmp (crash between delete and rename) is promoted, not reset to 0") {
-    val src = tmpDir("graft-rq7-src")
-    val base = tmpDir("graft-rq7-pend")
-    val pend = base + "/queue"
-    val dlq = tmpDir("graft-rq7-dlq") + "/dlq"
-    // live pending row waiting until round 5; the durable clock crashed
-    // between delete and rename — only .queue.clock.tmp (holding 7)
-    // exists. A reset-to-0 clock would make the row wait 5 MORE rounds;
-    // promoting the tmp makes it due immediately (7 >= 5).
-    Seq(("k_wait", "p", 1, 5L))
-      .toDF("key", "payload", "receive_count", "not_before")
-      .write.mode("overwrite").parquet(pend)
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(base, ".queue.clock.tmp"),
-      "7".getBytes("UTF-8"))
-    val delivered = scala.collection.concurrent.TrieMap.empty[String, Int]
-    Seq(("k_new", "p")).toDF("key", "payload").write.mode("append").parquet(src)
-    val stream = spark.readStream
-      .schema("key STRING, payload STRING").parquet(src)
-    val q = Requeue.requeueOnFailure(stream,
-      (k, _) => { delivered.updateWith(k)(v => Some(v.getOrElse(0) + 1)); true },
-      pend, dlq)
-    try q.processAllAvailable() finally q.stop()
-    assert(delivered.keySet == Set("k_wait", "k_new"),
-      s"clock reset future-dated the pending backoff: ${delivered.keySet}")
-    assert(Requeue.pendingCount(spark, pend) == 0L)
-  }
 
-  test("an orphaned pending tmp (crash between delete and rename) is promoted") {
-    val src = tmpDir("graft-rq4-src")
-    val base = tmpDir("graft-rq4-pend")
-    val pend = base + "/queue"
-    val dlq = tmpDir("graft-rq4-dlq") + "/dlq"
-    // simulate the crash: only .queue.tmp exists, holding a queued
-    // record, with the protocol's _GRAFT_COMMIT marker (the write had
-    // committed). _SUCCESS is DELETED to model a deployment running
-    // mapreduce.fileoutputcommitter.marksuccessfuljobs=false — the tmp
-    // must still be promoted, not misjudged as partial and dropped
-    Seq(("k_lost", "p", 1, 0L))
-      .toDF("key", "payload", "receive_count", "not_before")
-      .write.mode("overwrite").parquet(base + "/.queue.tmp")
-    new java.io.File(base + "/.queue.tmp", "_SUCCESS").delete()
-    assert(new java.io.File(base + "/.queue.tmp", "_GRAFT_COMMIT").createNewFile(),
-      "fixture: commit marker")
-    val delivered = scala.collection.concurrent.TrieMap.empty[String, Int]
+  test("a trigger whose deliver throws commits nothing; the replay redelivers and parks once") {
+    val src = tmpDir("graft-rq8-src")
+    val state = tmpDir("graft-rq8-state") + "/state"
+    val ckpt = tmpDir("graft-rq8-ckpt")
+    val crash = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val retries = new java.util.concurrent.atomic.AtomicInteger(0)
+    val delivered = scala.collection.mutable.ArrayBuffer.empty[String]
+    // a_poison always fails; b_retry fails its first delivery only;
+    // z_boom's delivery hits an infrastructure error while `crash` is set
     val deliver = (k: String, _: String) => {
-      delivered.updateWith(k)(v => Some(v.getOrElse(0) + 1)); true
+      delivered.synchronized { delivered += k }
+      k match {
+        case "a_poison" => false
+        case "b_retry" => retries.incrementAndGet() > 1
+        case "z_boom" if crash.get => throw new IllegalStateException("infra down")
+        case _ => true
+      }
     }
-    Seq(("k_new", "p")).toDF("key", "payload").write.mode("append").parquet(src)
-    val stream = spark.readStream
-      .schema("key STRING, payload STRING").parquet(src)
-    val q = Requeue.requeueOnFailure(stream, deliver, pend, dlq)
-    try q.processAllAvailable() finally q.stop()
-    assert(delivered.keySet == Set("k_lost", "k_new"),
-      s"recovered delivery set: ${delivered.keySet}")
+    def start() = Requeue.requeueOnFailure(
+      spark.readStream.schema("key STRING, payload STRING").parquet(src),
+      deliver, state, maxReceiveCount = 2, checkpointDir = Some(ckpt))
+    def rows(part: String) = TxLog.read(spark, state, partitions = Some(Set(part)))
+      .select("key", "receive_count", "tick").as[(String, Int, Long)].collect().toSet
+    Seq(("a_poison", "p"), ("b_retry", "p")).toDF("key", "payload")
+      .write.mode("append").parquet(src)
+    val q1 = start()
+    val before = try {
+      q1.processAllAvailable()
+      TxLog.snapshot(spark, state)
+    } finally q1.stop()
+    assert(rows("pending") == Set(("a_poison", 1, 1L), ("b_retry", 1, 1L)))
+    assert(rows("clock").map(_._3) == Set(1L))
+    // round 2: a_poison's 2nd failure would park it and b_retry would
+    // succeed, but z_boom's delivery throws before the commit
+    crash.set(true)
+    Seq(("z_boom", "p")).toDF("key", "payload").write.mode("append").parquet(src)
+    val q2 = start()
+    try intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+      q2.processAllAvailable())
+    finally q2.stop()
+    assert(TxLog.snapshot(spark, state) == before, "a failed trigger committed")
+    assert(rows("pending") == Set(("a_poison", 1, 1L), ("b_retry", 1, 1L)))
+    assert(rows("parked").isEmpty)
+    assert(rows("clock").map(_._3) == Set(1L))
+    // restart from the same checkpoint: the failed round replays
+    crash.set(false)
+    delivered.clear()
+    val q3 = start()
+    try q3.processAllAvailable() finally q3.stop()
+    assert(delivered.toSet == Set("a_poison", "b_retry", "z_boom"),
+      s"replay must redeliver every pending key: $delivered")
+    assert(Requeue.parked(spark, state).select("key", "receive_count")
+      .as[(String, Int)].collect().toSeq == Seq(("a_poison", 2)))
+    assert(Requeue.pendingCount(spark, state) == 0L)
+    assert(rows("clock").map(_._3) == Set(2L))
   }
 }

@@ -6,6 +6,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.sources.TxLog
 
 class StreamBloomDedupSpec extends SparkSpec {
   import spark.implicits._
@@ -54,11 +55,11 @@ class StreamBloomDedupSpec extends SparkSpec {
     val dir = Files.createTempDirectory("bloomstream").toString
     val b = Seq(1L -> "a", 2L -> "b", 3L -> "a")
     assert(StreamBloomDedup.processBatch(spark, docs(b: _*), dir).count() == 3)
-    val sizeBefore = spark.read.parquet(s"$dir/key_index").count()
+    val sizeBefore = TxLog.read(spark, s"$dir/key_index").count()
     val blobBefore = StreamBloomDedup.readBloom(spark, dir).get.bitSize()
     // at-least-once redelivery of the SAME batch
     assert(StreamBloomDedup.processBatch(spark, docs(b: _*), dir).count() == 0)
-    assert(spark.read.parquet(s"$dir/key_index").count() == sizeBefore)
+    assert(TxLog.read(spark, s"$dir/key_index").count() == sizeBefore)
     assert(StreamBloomDedup.readBloom(spark, dir).get.bitSize() == blobBefore)
   }
 
@@ -79,7 +80,7 @@ class StreamBloomDedupSpec extends SparkSpec {
     StreamBloomDedup.processBatch(spark, docs(1L -> "x", 2L -> "y"), dir)
     StreamBloomDedup.processBatch(spark, docs(3L -> "z"), dir)
     val bf = StreamBloomDedup.readBloom(spark, dir).get
-    val seen = spark.read.parquet(s"$dir/key_index").select("k").as[String].collect()
+    val seen = TxLog.read(spark, s"$dir/key_index").select("k").as[String].collect()
     assert(seen.length == 3)
     seen.foreach { k =>
       val h = docs(0L -> k).select(xxhash64(col("k"))).as[Long].head()
